@@ -32,12 +32,13 @@ PandasCallback = Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]
 @dataclass
 class SinkConfig:
     """Where parsed rows land. Parquet is the self-contained default;
-    `kind="clickhouse"` routes through sink.clickhouse_writer (gated on
-    the optional client lib being importable)."""
+    `kind="clickhouse_http"` / `"clickhouse_native"` insert into
+    ClickHouse over its HTTP interface or native TCP protocol, both
+    stdlib-only (sink.writer_for); `options` carries the writer's
+    settings."""
 
     path: str = ""
-    # parquet | delta | clickhouse | clickhouse_http |
-    # clickhouse_native | memory
+    # parquet | clickhouse_http | clickhouse_native | memory
     kind: str = "parquet"
     partition_col: str = "log_date"
     sort_cols: tuple[str, ...] = ("created_at",)  # readme.md:122 ORDER BY

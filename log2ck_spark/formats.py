@@ -673,6 +673,33 @@ def codec_for(ck_type: str) -> _Codec:
     )
 
 
+def insertable_columns(table: str, describe_rows) -> "dict[str, str]":
+    """{name: ck_type} of a table's INSERTABLE columns from its
+    `DESCRIBE TABLE` rows (name, type, default_type, ...) — the one
+    rule both ClickHouse transports apply to the DESCRIBE reply (HTTP
+    TabSeparated, native string block). MATERIALIZED/ALIAS columns are
+    dropped, exactly as CK drops them from `INSERT INTO t` column
+    expansion; a row without a type, or no insertable column at all,
+    is a malformed reply and raises."""
+    out: dict[str, str] = {}
+    for row in describe_rows:
+        name = row[0]
+        ck_type = row[1] if len(row) > 1 else ""
+        default_type = row[2] if len(row) > 2 else ""
+        if default_type in ("MATERIALIZED", "ALIAS"):
+            continue
+        if not ck_type:
+            raise ValueError(
+                f"DESCRIBE TABLE {table}: malformed row {row!r}"
+            )
+        out[name] = ck_type
+    if not out:
+        raise ValueError(
+            f"DESCRIBE TABLE {table} returned no insertable columns"
+        )
+    return out
+
+
 def ck_columns_for_schema(schema) -> "list[tuple[str, str]]":
     """Infer (name, ck_type) pairs from a Spark StructType — the
     zero-config path for the row_binary sink. Nullable Spark fields

@@ -48,7 +48,7 @@ import socket
 import struct
 from typing import Any, Optional
 
-from log2ck_spark.formats import _split_top, codec_for
+from log2ck_spark.formats import _split_top, codec_for, insertable_columns
 
 # -- protocol constants (src/Core/Protocol.h) -------------------------------
 
@@ -764,25 +764,12 @@ class NativeClient:
 
     def describe_insertable_columns(self, table: str) -> "dict[str, str]":
         """{name: type} of the table's INSERTABLE columns via DESCRIBE
-        over this connection — MATERIALIZED/ALIAS columns dropped,
-        exactly like sink.describe_table_columns does over HTTP."""
-        out: dict[str, str] = {}
-        for row in self.query_string_rows(f"DESCRIBE TABLE {table}"):
-            name = row[0]
-            ck_type = row[1] if len(row) > 1 else ""
-            default_type = row[2] if len(row) > 2 else ""
-            if default_type in ("MATERIALIZED", "ALIAS"):
-                continue
-            if not ck_type:
-                raise NativeProtocolError(
-                    f"DESCRIBE TABLE {table}: malformed row {row!r}"
-                )
-            out[name] = ck_type
-        if not out:
-            raise NativeProtocolError(
-                f"DESCRIBE TABLE {table} returned no insertable columns"
-            )
-        return out
+        over this connection — MATERIALIZED/ALIAS columns dropped by
+        the same rule sink.describe_table_columns applies over HTTP
+        (formats.insertable_columns)."""
+        return insertable_columns(
+            table, self.query_string_rows(f"DESCRIBE TABLE {table}")
+        )
 
     def _consume_prefix(self, ck_type: str) -> None:
         r = self._reader

@@ -4,13 +4,19 @@ Default sink: date-partitioned Parquet sorted within partitions on the
 reference DDL's sort key (`readme.md:121-122` — PARTITION BY
 toDate(created_at), ORDER BY created_at). Partitioning gives B1
 partition pruning; the sort gives parquet min/max row-group skipping
-(B2). ClickHouse stays available behind an import-try, batched inserts
-inside foreachBatch (connection per partition, never per row).
+(B2). ClickHouse has two stdlib writers, one per wire: HTTP
+(`clickhouse_http`) and native TCP (`clickhouse_native`). They share
+one core — option parsing, the derived partition-column rule with its
+DESCRIBE cache, and the batched-insert loop run inside foreachBatch
+(connection per partition, never per row); each transport keeps only
+its own encoding and connection handling.
 """
 
 from __future__ import annotations
 
+import re
 from collections.abc import Iterator
+from dataclasses import dataclass
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame
@@ -151,48 +157,32 @@ def foreach_batch_writer(
 CK_INSERT_BATCH = 10_000
 
 
-def insert_in_batches(
-    client: Any, table: str, rows, batch_size: int = CK_INSERT_BATCH,
-    dedup_token: bool = False,
+def _flush_in_batches(
+    items,
+    flush: Callable[[list], None],
+    batch_size: int,
+    max_bytes: float = float("inf"),
+    size: Callable[[Any], int] = lambda _item: 0,
 ) -> int:
-    """Buffer rows and flush every `batch_size` — the reference's
-    batch-insert loop (`Worker.php:71-80`: accumulate lines, insert in
-    one call, only then advance the offset). Factored out of the
-    executor closure so the batching contract is unit-testable with a
-    fake client. Returns rows inserted.
-
-    `dedup_token=True` passes a content-hash
-    `insert_deduplication_token` setting per flush (same idempotent-
-    replay contract as the HTTP and native writers) — requires a
-    client whose `insert` accepts a `settings` kwarg (clickhouse-
-    connect does); the default keeps the 2-arg fake-client contract."""
-    import hashlib as _hashlib
-
-    def _flush(buf: list) -> None:
-        if not dedup_token:
-            client.insert(table, buf)
-            return
-        h = _hashlib.sha256(table.encode())
-        for r in buf:
-            h.update(b"\1")
-            for v in r:
-                h.update(repr(v).encode())
-                h.update(b"\0")
-        client.insert(
-            table, buf,
-            settings={"insert_deduplication_token": h.hexdigest()},
-        )
-
-    buf: list[list] = []
+    """The per-partition batching loop both ClickHouse writers run —
+    the reference's batch-insert loop (`Worker.php:71-80`: accumulate
+    lines, insert them in one call, only then advance the offset).
+    Flushes every `batch_size` items, or earlier once the buffered
+    `size` reaches `max_bytes`; whichever trigger fires first flushes,
+    and a single over-sized item still ships (alone). Returns items
+    flushed."""
+    buf: list = []
+    buf_bytes = 0
     n = 0
-    for row in rows:
-        buf.append(list(row))
-        if len(buf) >= batch_size:
-            _flush(buf)
+    for item in items:
+        buf.append(item)
+        buf_bytes += size(item)
+        if len(buf) >= batch_size or buf_bytes >= max_bytes:
+            flush(buf)
             n += len(buf)
-            buf = []
+            buf, buf_bytes = [], 0
     if buf:
-        _flush(buf)
+        flush(buf)
         n += len(buf)
     return n
 
@@ -208,13 +198,11 @@ def memory_rows(name: str = "default") -> list:
 
 
 def writer_for(sink: SinkConfig) -> Callable[[DataFrame, int], None]:
-    """Dispatch on SinkConfig.kind — parquet (default) | clickhouse |
-    delta | memory. Optional backends fail loudly at CONFIG time (here)
-    rather than mid-stream."""
+    """Dispatch on SinkConfig.kind — parquet (default) |
+    clickhouse_http | clickhouse_native | memory. A bad kind or option
+    fails loudly at CONFIG time (here) rather than mid-stream."""
     if sink.kind == "parquet":
         return foreach_batch_writer(sink)
-    if sink.kind == "clickhouse":
-        return clickhouse_writer(sink)
     if sink.kind == "clickhouse_http":
         return clickhouse_http_writer(sink)
     if sink.kind == "clickhouse_native":
@@ -226,21 +214,6 @@ def writer_for(sink: SinkConfig) -> Callable[[DataFrame, int], None]:
             _MEMORY_SINKS.setdefault(name, []).extend(batch_df.collect())
 
         return _write_mem
-    if sink.kind == "delta":
-        try:
-            import delta  # type: ignore  # noqa: F401
-        except ImportError as e:
-            raise NotImplementedError(
-                "delta-spark not installed; use the parquet sink"
-            ) from e
-
-        def _write_delta(batch_df: DataFrame, batch_id: int) -> None:  # pragma: no cover
-            w = batch_df.write.format("delta").mode("append")
-            if sink.partition_col in batch_df.columns:
-                w = w.partitionBy(sink.partition_col)
-            w.save(sink.path)
-
-        return _write_delta
     raise ValueError(f"unknown sink kind: {sink.kind!r}")
 
 
@@ -345,10 +318,9 @@ def _quote_ident(name: str) -> str:
     return "`" + name.replace("\\", "\\\\").replace("`", "\\`") + "`"
 
 
+# Escaped control characters; any other escaped character (\\, \', \"
+# among them) stands for itself.
 _TSV_UNESCAPES = {
-    "\\": "\\",
-    "'": "'",
-    '"': '"',
     "b": "\b",
     "f": "\f",
     "r": "\r",
@@ -360,23 +332,56 @@ _TSV_UNESCAPES = {
 }
 
 
+_TSV_ESCAPE = re.compile(r"\\(.)", re.DOTALL)
+
+
 def _tsv_unescape(field: str) -> str:
     """Undo ClickHouse TabSeparated output escaping (the format's
     documented set: \\b \\f \\r \\n \\t \\0 \\' \\\\ …). An unknown
     escape passes the character through verbatim, matching the
     server's own lenient reader."""
-    if "\\" not in field:
-        return field
-    out, i, n = [], 0, len(field)
-    while i < n:
-        c = field[i]
-        if c == "\\" and i + 1 < n:
-            out.append(_TSV_UNESCAPES.get(field[i + 1], field[i + 1]))
-            i += 2
-        else:
-            out.append(c)
-            i += 1
-    return "".join(out)
+    return _TSV_ESCAPE.sub(
+        lambda m: _TSV_UNESCAPES.get(m.group(1), m.group(1)), field
+    )
+
+
+def _ck_http(
+    url: str,
+    query: str,
+    params: "dict[str, str] | None",
+    user: "str | None",
+    password: "str | None",
+    timeout_s: float,
+    data: "bytes | None" = None,
+    headers: "dict[str, str] | None" = None,
+) -> bytes:
+    """One request to ClickHouse's HTTP interface — GET, or POST when
+    `data` is given — returning the response body. `params`
+    (database=..., CK settings, etc.) ride the query string after
+    `query`. urlopen raises HTTPError for >= 400; any 2xx is success
+    (204/202 behind proxies are still accepted inserts)."""
+    import urllib.parse as _up
+    import urllib.request as _ur
+
+    headers = dict(headers or {})
+    # CK's HTTP auth headers (public interface contract); absent ->
+    # the server's default user, same as the reference's bare DSN.
+    if user is not None:
+        headers["X-ClickHouse-User"] = user
+    if password is not None:
+        headers["X-ClickHouse-Key"] = password
+    req = _ur.Request(
+        url.rstrip("/") + "/?" + _up.urlencode({"query": query, **(params or {})}),
+        data=data,
+        headers=headers,
+        method="GET" if data is None else "POST",
+    )
+    with _ur.urlopen(req, timeout=timeout_s) as resp:  # noqa: S310
+        if not 200 <= resp.status < 300:
+            raise RuntimeError(
+                f"ClickHouse HTTP request failed: HTTP {resp.status}"
+            )
+        return resp.read()
 
 
 def describe_table_columns(
@@ -401,47 +406,28 @@ def describe_table_columns(
     reference's published DDL, all LowCardinality(String)/DateTime —
     would misparse, failing the insert or corrupting data. Asking the
     server is the only layout source that cannot drift."""
-    import urllib.parse as _up
-    import urllib.request as _ur
+    from log2ck_spark.formats import insertable_columns
 
-    qs = {"query": f"DESCRIBE TABLE {table} FORMAT TabSeparated"}
-    qs.update(params or {})
-    endpoint = url.rstrip("/") + "/?" + _up.urlencode(qs)
-    headers = {}
-    if user is not None:
-        headers["X-ClickHouse-User"] = user
-    if password is not None:
-        headers["X-ClickHouse-Key"] = password
-    req = _ur.Request(endpoint, headers=headers, method="GET")
-    with _ur.urlopen(req, timeout=timeout_s) as resp:  # noqa: S310
-        if not 200 <= resp.status < 300:
-            raise RuntimeError(
-                f"DESCRIBE TABLE {table} failed: HTTP {resp.status}"
-            )
-        text = resp.read().decode("utf-8")
-    out: dict[str, str] = {}
-    for line in text.splitlines():
-        if not line:
-            continue
-        # TabSeparated backslash-escapes its field values — a type
-        # whose text contains a quoted argument (DateTime('UTC'),
-        # DateTime64(3, 'UTC'), Enum8('a' = 1)) arrives as
-        # DateTime(\'UTC\'), which codec_for would reject verbatim
-        fields = [_tsv_unescape(f) for f in line.split("\t")]
-        name, ck_type = fields[0], fields[1] if len(fields) > 1 else ""
-        default_type = fields[2] if len(fields) > 2 else ""
-        if default_type in ("MATERIALIZED", "ALIAS"):
-            continue
-        if not ck_type:
-            raise ValueError(
-                f"DESCRIBE TABLE {table}: malformed TSV line {line!r}"
-            )
-        out[name] = ck_type
-    if not out:
+    query = f"DESCRIBE TABLE {table} FORMAT TabSeparated"
+    text = _ck_http(url, query, params, user, password, timeout_s).decode()
+    # TabSeparated backslash-escapes its field values — a type whose
+    # text contains a quoted argument (DateTime('UTC'),
+    # DateTime64(3, 'UTC'), Enum8('a' = 1)) arrives as
+    # DateTime(\'UTC\'), which codec_for would reject verbatim
+    rows = (line.split("\t") for line in text.splitlines() if line)
+    return insertable_columns(table, ([_tsv_unescape(f) for f in r] for r in rows))
+
+
+def _http_compression(value: "str | None") -> "str | None":
+    """The HTTP body compression setting, normalized: "gzip", or None
+    for the uncompressed wire (None | "none" | ""); anything else
+    raises, so the writer rejects it at config time."""
+    name = "none" if value is None else str(value).lower()
+    if name not in ("gzip", "none", ""):
         raise ValueError(
-            f"DESCRIBE TABLE {table} returned no insertable columns"
+            f"unknown compression {value!r} (expected 'gzip' or 'none')"
         )
-    return out
+    return "gzip" if name == "gzip" else None
 
 
 # Server URLs that rejected insert_deduplication_token (pre-22.2):
@@ -472,9 +458,9 @@ def http_insert_in_batches(
 ) -> int:
     """Batched INSERT over ClickHouse's public HTTP interface: POST
     `INSERT INTO <table> FORMAT JSONEachRow` with newline-delimited
-    JSON bodies, one request per `batch_size` rows — the same
-    accumulate-then-flush contract as `insert_in_batches`
-    (`Worker.php:71-80`), but on the stdlib-only wire path, so it is
+    JSON bodies, one request per `batch_size` rows — the writers'
+    shared accumulate-then-flush loop (`_flush_in_batches`,
+    `Worker.php:71-80`) on the stdlib-only wire path, so it is
     testable against a live local HTTP endpoint and deployable with no
     optional client lib. A non-200 raises, failing the Spark task —
     at-least-once via engine task retry + the batch replay note on
@@ -534,16 +520,10 @@ def http_insert_in_batches(
     import gzip as _gzip
     import time as _time
     import urllib.error as _ue
-    import urllib.parse as _up
-    import urllib.request as _ur
 
     from log2ck_spark.formats import rows_to_row_binary
 
-    if compression not in (None, "gzip"):
-        raise ValueError(
-            f"unsupported HTTP insert compression: {compression!r} "
-            f"(expected 'gzip' or None)"
-        )
+    compression = _http_compression(compression)
     if columns is not None:
         col_list = ", ".join(_quote_ident(name) for name, _t in columns)
         query = f"INSERT INTO {table} ({col_list}) FORMAT RowBinary"
@@ -555,8 +535,6 @@ def http_insert_in_batches(
         body_rows = rows_to_json_each_row(rows)
         sep, tail = b"\n", b"\n"
         content_type = "application/x-ndjson"
-    qs = {"query": query}
-    qs.update(params or {})  # database=..., CK settings, etc.
     # Mutable so one UNKNOWN_SETTING response (servers < 22.2, where
     # insert_deduplication_token does not exist — the HTTP interface
     # rejects unknown settings, unlike native, which skips unimportant
@@ -568,36 +546,14 @@ def http_insert_in_batches(
     # rejected POST + warning on every single flush forever.
     token_state = {
         "on": dedup_token
-        and "insert_deduplication_token" not in qs
+        and "insert_deduplication_token" not in (params or {})
         and url not in _NO_TOKEN_SERVERS
     }
-    endpoint = url.rstrip("/") + "/?" + _up.urlencode(qs)
     headers = {"Content-Type": content_type}
-    # CK's HTTP auth headers (public interface contract); absent ->
-    # the server's default user, same as the reference's bare DSN.
-    if user is not None:
-        headers["X-ClickHouse-User"] = user
-    if password is not None:
-        headers["X-ClickHouse-Key"] = password
 
-    def _post_once(data: bytes, target: str) -> None:
-        req = _ur.Request(
-            target,
-            data=data,
-            headers=headers,
-            method="POST",
-        )
-        # urlopen raises HTTPError for >= 400; any 2xx is success
-        # (204/202 behind proxies are still accepted inserts).
-        with _ur.urlopen(req, timeout=timeout_s) as resp:  # noqa: S310
-            if not 200 <= resp.status < 300:
-                raise RuntimeError(
-                    f"ClickHouse HTTP insert failed: {resp.status}"
-                )
-
-    def _target_for(data: bytes) -> str:
+    def _params_for(data: bytes) -> "dict[str, str] | None":
         if not token_state["on"]:
-            return endpoint
+            return params
         # content-hash of the UNCOMPRESSED body: replays of the
         # same rows — in-place retry, task re-run, batch replay —
         # derive the same token, so the server absorbs them
@@ -606,9 +562,7 @@ def http_insert_in_batches(
         token = _hashlib.sha256(
             table.encode() + b"\0" + data
         ).hexdigest()
-        return endpoint + "&" + _up.urlencode(
-            {"insert_deduplication_token": token}
-        )
+        return {**(params or {}), "insert_deduplication_token": token}
 
     def _is_unknown_token_setting(e) -> bool:
         # CK's HTTP interface reports exceptions in the body as
@@ -640,7 +594,10 @@ def http_insert_in_batches(
         attempt = 0
         while True:
             try:
-                _post_once(data, _target_for(raw))
+                _ck_http(
+                    url, query, _params_for(raw), user, password,
+                    timeout_s, data, headers,
+                )
                 return
             except _ue.HTTPError as e:
                 # 429/5xx are the transient class; other 4xx will not
@@ -674,32 +631,108 @@ def http_insert_in_batches(
             _time.sleep(retry_backoff_s * (2 ** attempt))
             attempt += 1
 
-    buf: list[bytes] = []
-    buf_bytes = 0
-    n = 0
-    for line in body_rows:
-        buf.append(line)
-        buf_bytes += len(line) + len(sep)
-        if len(buf) >= batch_size or buf_bytes >= max_body_bytes:
-            _flush(buf)
-            n += len(buf)
-            buf, buf_bytes = [], 0
-    if buf:
-        _flush(buf)
-        n += len(buf)
-    return n
+    return _flush_in_batches(
+        body_rows, _flush, batch_size, max_body_bytes,
+        size=lambda line: len(line) + len(sep),
+    )
 
 
-def _require_opt(opts: "dict[str, Any]", key: str, kind: str) -> Any:
-    """Pop a mandatory sink option, converting the bare KeyError into
-    the descriptive ValueError style writer_for's fail-at-config-time
-    contract promises."""
-    try:
-        return opts.pop(key)
-    except KeyError:
+def _ck_options(
+    sink: SinkConfig, kind: str, endpoint_key: str
+) -> "tuple[str, str, int, bool, bool | str, dict[str, Any]]":
+    """Pop and validate, at writer creation, the options both
+    ClickHouse writers share — `table`, the transport's endpoint
+    (`url` | `host`), `batch_size`, `dedup_token` and
+    `drop_partition_col` — so a bad value fails with a descriptive
+    ValueError at CONFIG time (writer_for's contract), never as a bare
+    KeyError or mid-stream. Returns (table, endpoint, batch_size,
+    dedup_token, drop_partition_col, remaining options); the transport
+    pops its own options from the last."""
+    opts: dict[str, Any] = dict(sink.options)
+    for key in ("table", endpoint_key):
+        if key not in opts:
+            raise ValueError(f"{kind} sink requires a '{key}' option")
+    table, endpoint = str(opts.pop("table")), str(opts.pop(endpoint_key))
+    batch_size = int(opts.pop("batch_size", CK_INSERT_BATCH))
+    dedup_token = opts.pop("dedup_token", True)
+    if not isinstance(dedup_token, bool):
         raise ValueError(
-            f"{kind} sink requires a '{key}' option"
-        ) from None
+            f"{kind} sink: dedup_token={dedup_token!r} "
+            f"(expected true or false)"
+        )
+    drop_pc = opts.pop("drop_partition_col", "auto")
+    if isinstance(drop_pc, str) and drop_pc.lower() == "auto":
+        drop_pc = "auto"
+    elif not isinstance(drop_pc, bool):
+        raise ValueError(
+            f"{kind} sink: drop_partition_col={drop_pc!r} "
+            f"(expected true, false, or 'auto')"
+        )
+    return table, endpoint, batch_size, dedup_token, drop_pc, opts
+
+
+@dataclass
+class _TableColumns:
+    """The target table's insertable columns, {name: ck_type} — the
+    one DESCRIBE cache a ClickHouse writer keeps. `types` is preset
+    when the layout is already known (an explicit `columns` pin, or a
+    DESCRIBE the writer ran at creation); otherwise `lists` fetches it
+    through the transport's `describe()` on first use, on the driver.
+
+    A success is cached for the writer's lifetime. A failure is not:
+    DESCRIBE denied/unsupported falls back to the drop-the-derived-
+    column rule (pre-r12 behavior) for THIS batch, with a warning — a
+    genuinely-insertable partition column would otherwise be silently
+    defaulted server-side — and the next batch re-DESCRIBEs, so one
+    network blip on the first batch cannot lock in the drop rule for
+    the writer's lifetime (ADVICE r12)."""
+
+    kind: str
+    table: str
+    describe: "Callable[[], dict[str, str]]"
+    types: "dict[str, str] | None" = None
+
+    def lists(self, name: str) -> bool:
+        if self.types is None:
+            try:
+                self.types = self.describe()
+            except Exception as e:  # noqa: BLE001
+                import logging
+
+                logging.getLogger(__name__).warning(
+                    "%s sink: DESCRIBE TABLE %s failed (%s); assuming "
+                    "partition column is derived and dropping it for "
+                    "THIS batch (will retry DESCRIBE next batch) — set "
+                    "drop_partition_col explicitly to silence this",
+                    self.kind, self.table, e,
+                )
+                return False
+        return name in self.types
+
+
+def _drop_derived_partition_col(
+    batch_df: DataFrame,
+    pc: str,
+    drop_pc: "bool | str",
+    table_cols: _TableColumns,
+) -> DataFrame:
+    """The ingest pipeline appends `log_date` (sink.partition_col) for
+    the PARQUET layout — toDate(created_at), the reference DDL's
+    PARTITION BY, which that DDL MATERIALIZES server-side. A ClickHouse
+    target therefore usually has no insertable column of that name, and
+    shipping it would fail the insert (JSONEachRow: unknown field;
+    RowBinary/native: unknown batch column). Drop the derived column —
+    unless the user set drop_partition_col=false, or, under "auto", the
+    table's known layout lists it (then it's real data, not layout
+    plumbing). Only the derived case is dropped: created_at must also
+    be present."""
+    if (
+        pc in batch_df.columns
+        and "created_at" in batch_df.columns
+        and (drop_pc is True or (drop_pc == "auto" and not table_cols.lists(pc)))
+    ):
+        return batch_df.drop(pc)
+    return batch_df
 
 
 def clickhouse_http_writer(
@@ -707,8 +740,8 @@ def clickhouse_http_writer(
 ) -> Callable[[DataFrame, int], None]:
     """ClickHouse sink over the HTTP interface (kind="clickhouse_http").
     Zero optional dependencies; inserts run per-partition on executors
-    (one HTTP connection each, never per row), mirroring the
-    clickhouse_connect writer's shape.
+    (one HTTP connection each, never per row), the same shape as the
+    native writer.
 
     `format: "row_binary"` switches the wire encoding from
     JSONEachRow to FORMAT RowBinary (log2ck_spark/formats.py — the
@@ -753,10 +786,9 @@ def clickhouse_http_writer(
     (default) — "auto" drops the pipeline's derived parquet partition
     column unless the user declared it or the server's DESCRIBE lists
     it as a real insertable column (consulted on every format)."""
-    opts: dict[str, Any] = dict(sink.options)
-    table = str(_require_opt(opts, "table", "clickhouse_http"))
-    url = str(_require_opt(opts, "url", "clickhouse_http"))
-    batch_size = int(opts.pop("batch_size", CK_INSERT_BATCH))
+    table, url, batch_size, dedup_token, drop_pc, opts = _ck_options(
+        sink, "clickhouse_http", "url"
+    )
     user = opts.pop("user", None)
     password = opts.pop("password", None)
     fmt = str(opts.pop("format", "json_each_row")).lower()
@@ -765,39 +797,18 @@ def clickhouse_http_writer(
             f"clickhouse_http sink: unknown format {fmt!r} "
             f"(expected 'json_each_row' or 'row_binary')"
         )
-    compression: "str | None" = str(
-        opts.pop("compression", "gzip")
-    ).lower()
-    if compression in ("none", ""):
-        compression = None
-    elif compression != "gzip":
-        raise ValueError(
-            f"clickhouse_http sink: unknown compression {compression!r} "
-            f"(expected 'gzip' or 'none')"
-        )
-    compression_level = int(opts.pop("compression_level", 3))
-    max_body_bytes = int(opts.pop("max_body_bytes", 64 * 1024 * 1024))
-    retries = int(opts.pop("retries", 2))
-    retry_backoff_s = float(opts.pop("retry_backoff_s", 1.0))
-    dedup_token = opts.pop("dedup_token", True)
-    if not isinstance(dedup_token, bool):
-        raise ValueError(
-            f"clickhouse_http sink: dedup_token={dedup_token!r} "
-            f"(expected true or false)"
-        )
-    drop_pc = opts.pop("drop_partition_col", "auto")
-    if isinstance(drop_pc, str):
-        if drop_pc.lower() != "auto":
-            raise ValueError(
-                f"clickhouse_http sink: drop_partition_col={drop_pc!r} "
-                f"(expected true, false, or 'auto')"
-            )
-        drop_pc = "auto"
-    elif not isinstance(drop_pc, bool):
-        raise ValueError(
-            f"clickhouse_http sink: drop_partition_col={drop_pc!r} "
-            f"(expected true, false, or 'auto')"
-        )
+    # http_insert_in_batches' per-request settings, typed at config time
+    insert_kw: dict[str, Any] = {
+        "batch_size": batch_size,
+        "user": user,
+        "password": password,
+        "compression": _http_compression(opts.pop("compression", "gzip")),
+        "compression_level": int(opts.pop("compression_level", 3)),
+        "max_body_bytes": int(opts.pop("max_body_bytes", 64 * 1024 * 1024)),
+        "retries": int(opts.pop("retries", 2)),
+        "retry_backoff_s": float(opts.pop("retry_backoff_s", 1.0)),
+        "dedup_token": dedup_token,
+    }
     declared: "list[tuple[str, str]] | None" = None
     infer_from_schema = False
     raw_cols = opts.pop("columns", None)
@@ -826,130 +837,61 @@ def clickhouse_http_writer(
                     f"(expected 'name CkType')"
                 )
             declared.append((name, ck_type.strip()))
-        from log2ck_spark.formats import codec_for
-
-        for _n, t in declared:  # config-time type validation
-            codec_for(t)
     # everything else (database, CK settings like async_insert) rides
     # the query string — nothing is silently dropped
     params = {k: str(v) for k, v in opts.items()}
 
-    server_types: "dict[str, str] | None" = None
-    if fmt == "row_binary" and declared is None and not infer_from_schema:
-        # Writer creation is the fail-loudly point: fetch the layout
-        # and validate every server type's codec NOW, so an
-        # unreachable server or an unencodable column type never
-        # starts a stream that dies in its first batch's tasks.
-        from log2ck_spark.formats import codec_for
+    from log2ck_spark.formats import codec_for
 
-        server_types = describe_table_columns(
+    table_cols = _TableColumns(
+        "clickhouse_http", table,
+        lambda: describe_table_columns(
             url, table, user=user, password=password, params=params
-        )
-        for _n, t in server_types.items():
-            codec_for(t)
-
-    # Lazily-fetched layout for the drop rule below on paths that
-    # don't already DESCRIBE at creation (json_each_row, and
-    # row_binary with declared/inferred columns): one fetch per
-    # writer, first batch that actually carries the partition column.
-    _drop_layout: dict[str, Any] = {"fetched": False, "types": None}
-
-    def _server_lists_pc(pc: str) -> bool:
-        if server_types is not None:
-            return pc in server_types
-        if not _drop_layout["fetched"]:
-            try:
-                _drop_layout["types"] = describe_table_columns(
-                    url, table, user=user, password=password,
-                    params=params,
-                )
-                _drop_layout["fetched"] = True
-            except Exception as e:  # noqa: BLE001
-                # DESCRIBE denied/unsupported: fall back to the
-                # drop-the-derived-column rule (pre-r12 behavior) but
-                # say so — a genuinely-insertable partition column
-                # would otherwise be silently defaulted server-side.
-                # fetched stays False: a TRANSIENT failure here (one
-                # network blip on the first batch) must not lock in
-                # the drop rule for the writer's lifetime — the next
-                # batch re-DESCRIBEs and can resolve it correctly
-                # (ADVICE r12).
-                import logging
-
-                logging.getLogger(__name__).warning(
-                    "clickhouse_http sink: DESCRIBE TABLE %s failed "
-                    "(%s); assuming partition column is derived and "
-                    "dropping it for THIS batch (will retry DESCRIBE "
-                    "next batch) — set drop_partition_col explicitly "
-                    "to silence this", table, e,
-                )
-        t = _drop_layout["types"]
-        return t is not None and pc in t
+        ),
+    )
+    if declared is not None:
+        # an explicit `columns` pin IS the wire layout — the server
+        # need not be consulted: absent from the pin means the column
+        # never ships
+        table_cols.types = dict(declared)
+    elif fmt == "row_binary" and not infer_from_schema:
+        # Writer creation is the fail-loudly point: fetch the layout
+        # now (an unreachable server raises here, not through the
+        # warn-and-retry of `lists`), so an unreachable server never
+        # starts a stream that dies in its first batch's tasks.
+        table_cols.types = table_cols.describe()
+    for t in (table_cols.types or {}).values():
+        codec_for(t)  # config-time check: every column type encodes
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        # The ingest pipeline appends `log_date` (sink.partition_col)
-        # for the PARQUET layout — toDate(created_at), the reference
-        # DDL's PARTITION BY, which that DDL MATERIALIZES server-side.
-        # A ClickHouse target therefore usually has no insertable
-        # column of that name, and shipping it would fail the insert
-        # (JSONEachRow: unknown field; RowBinary: unknown batch
-        # column). Drop the derived column here — UNLESS the user
-        # declared it explicitly, set drop_partition_col themselves,
-        # or the server lists it insertable (then it's real data, not
-        # layout plumbing — the server is consulted on EVERY format,
-        # not just the row_binary default). Only the derived case is
-        # dropped: created_at must also be present.
-        pc = sink.partition_col
-        if pc in batch_df.columns and "created_at" in batch_df.columns:
-            if drop_pc is True:
-                batch_df = batch_df.drop(pc)
-            elif drop_pc == "auto":
-                if declared is not None:
-                    # an explicit `columns` pin IS the wire layout —
-                    # the server need not be consulted: absent from
-                    # the pin means the column never ships
-                    if not any(n == pc for n, _t in declared):
-                        batch_df = batch_df.drop(pc)
-                elif not _server_lists_pc(pc):
-                    batch_df = batch_df.drop(pc)
-        if fmt == "row_binary":
-            if declared is not None:
-                columns = declared
-            elif server_types is not None:
-                missing = [
-                    c for c in batch_df.columns if c not in server_types
-                ]
-                if missing:
-                    raise ValueError(
-                        f"batch columns {missing} do not exist as "
-                        f"insertable columns of {table} (server has: "
-                        f"{sorted(server_types)}) — rename upstream or "
-                        f"declare 'columns' explicitly"
-                    )
-                columns = [(c, server_types[c]) for c in batch_df.columns]
-            else:
-                from log2ck_spark.formats import ck_columns_for_schema
-
-                columns = ck_columns_for_schema(batch_df.schema)
-        else:
+        batch_df = _drop_derived_partition_col(
+            batch_df, sink.partition_col, drop_pc, table_cols
+        )
+        if fmt != "row_binary":
             columns = None
+        elif declared is not None:
+            columns = declared
+        elif infer_from_schema:
+            from log2ck_spark.formats import ck_columns_for_schema
+
+            columns = ck_columns_for_schema(batch_df.schema)
+        else:
+            server_types = table_cols.types
+            missing = [
+                c for c in batch_df.columns if c not in server_types
+            ]
+            if missing:
+                raise ValueError(
+                    f"batch columns {missing} do not exist as "
+                    f"insertable columns of {table} (server has: "
+                    f"{sorted(server_types)}) — rename upstream or "
+                    f"declare 'columns' explicitly"
+                )
+            columns = [(c, server_types[c]) for c in batch_df.columns]
 
         def _insert_partition(rows):
             http_insert_in_batches(
-                url,
-                table,
-                rows,
-                batch_size=batch_size,
-                user=user,
-                password=password,
-                params=params,
-                columns=columns,
-                compression=compression,
-                compression_level=compression_level,
-                max_body_bytes=max_body_bytes,
-                retries=retries,
-                retry_backoff_s=retry_backoff_s,
-                dedup_token=dedup_token,
+                url, table, rows, params=params, columns=columns, **insert_kw
             )
 
         batch_df.rdd.foreachPartition(_insert_partition)
@@ -968,19 +910,20 @@ def clickhouse_native_writer(
     and issues one INSERT query per `batch_size` rows; the server's
     typed-block handshake governs the block encoding, so the layout
     can never drift from the table (same property as the HTTP
-    DESCRIBE default).
+    DESCRIBE default). Writer creation connects and pings, so an
+    unreachable server or bad credentials fail at CONFIG time, not in
+    the first batch's tasks.
 
     Options: `host` (required), `table` (required), `port` (9000),
     `database` (""), `user` ("default"), `password` (""),
     `batch_size` (10k), `timeout_s` (30), `dedup_token` (true: a
     content-hash insert_deduplication_token per batch — replays are
     absorbed by a MergeTree dedup window, same as the HTTP sink),
-    `drop_partition_col` (true: drop the pipeline's derived parquet
-    partition column when created_at is present; set false if the
-    target table genuinely stores it), `probe` (true: connect + ping
-    at writer creation so an unreachable server or bad credentials
-    fail at CONFIG time, not in the first batch's tasks). Any other
-    option rides the query as a ClickHouse setting string.
+    `drop_partition_col` (true | false | "auto", the default: drop the
+    pipeline's derived parquet partition column unless the server's
+    DESCRIBE — over the native read path — lists it insertable; same
+    rule and cache as the HTTP sink). Any other option rides the query
+    as a ClickHouse setting string.
 
     WIRE EFFICIENCY: this path sends UNCOMPRESSED blocks (protocol
     compression=0 in the hello — the reference's client does the
@@ -992,36 +935,17 @@ def clickhouse_native_writer(
     format="row_binary" (default gzip: measured 3-7x smaller bodies,
     DEPLOY.md) — the writer logs this steer once at creation so the
     trade-off is visible where the choice is made, not only in docs."""
-    opts: dict[str, Any] = dict(sink.options)
-    table = str(_require_opt(opts, "table", "clickhouse_native"))
-    host = str(_require_opt(opts, "host", "clickhouse_native"))
+    table, host, batch_size, dedup_token, drop_pc, opts = _ck_options(
+        sink, "clickhouse_native", "host"
+    )
     port = int(opts.pop("port", 9000))
     database = str(opts.pop("database", ""))
     user = str(opts.pop("user", "default"))
     password = str(opts.pop("password", ""))
-    batch_size = int(opts.pop("batch_size", CK_INSERT_BATCH))
     timeout_s = float(opts.pop("timeout_s", 30.0))
-    dedup_token = opts.pop("dedup_token", True)
-    if not isinstance(dedup_token, bool):
-        raise ValueError(
-            f"clickhouse_native sink: dedup_token={dedup_token!r} "
-            f"(expected true or false)"
-        )
-    drop_pc_opt = opts.pop("drop_partition_col", "auto")
-    if isinstance(drop_pc_opt, str):
-        if drop_pc_opt.lower() != "auto":
-            raise ValueError(
-                f"clickhouse_native sink: drop_partition_col="
-                f"{drop_pc_opt!r} (expected true, false, or 'auto')"
-            )
-        drop_pc_opt = "auto"
-    elif not isinstance(drop_pc_opt, bool):
-        raise ValueError(
-            f"clickhouse_native sink: drop_partition_col="
-            f"{drop_pc_opt!r} (expected true, false, or 'auto')"
-        )
-    probe = bool(opts.pop("probe", True))
     settings = {k: str(v) for k, v in opts.items()}
+    # a caller-supplied insert_deduplication_token setting wins
+    auto_token = dedup_token and "insert_deduplication_token" not in settings
 
     from log2ck_spark.native import NativeClient, content_dedup_token
 
@@ -1034,191 +958,44 @@ def clickhouse_native_writer(
         "kind=clickhouse_http with format=row_binary (gzip default, "
         "3-7x smaller bodies)"
     )
-    if probe:
+
+    def _connected(use: "Callable[[NativeClient], Any]") -> Any:
         client = NativeClient(
             host, port, database=database, user=user,
             password=password, timeout_s=timeout_s,
         )
         client.connect()
         try:
-            client.ping()
-            if drop_pc_opt == "auto":
-                # same guard as the HTTP writer: drop the derived
-                # parquet partition column ONLY if the server does not
-                # list it as a real insertable column — resolved here,
-                # over the probe connection, via DESCRIBE on the
-                # native read path (fail-at-config-time, no per-batch
-                # round-trip)
-                server_cols = client.describe_insertable_columns(table)
-                drop_pc_opt = sink.partition_col not in server_cols
+            return use(client)
         finally:
             client.close()
-    if drop_pc_opt == "auto":
-        # probe disabled: nothing to consult — keep the pre-r12
-        # behavior (the reference DDL materializes the column) but
-        # say so, since a genuinely-insertable column would be lost
-        import logging
 
-        logging.getLogger(__name__).warning(
-            "clickhouse_native sink: probe=false leaves "
-            "drop_partition_col unresolved; defaulting to drop — set "
-            "drop_partition_col explicitly to silence this"
-        )
-        drop_pc_opt = True
+    # bad address or credentials fail here, at CONFIG time
+    _connected(NativeClient.ping)
+    table_cols = _TableColumns(
+        "clickhouse_native", table,
+        lambda: _connected(lambda c: c.describe_insertable_columns(table)),
+    )
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        pc = sink.partition_col
-        if (
-            drop_pc_opt
-            and pc in batch_df.columns
-            and "created_at" in batch_df.columns
-        ):
-            batch_df = batch_df.drop(pc)
+        batch_df = _drop_derived_partition_col(
+            batch_df, sink.partition_col, drop_pc, table_cols
+        )
         names = list(batch_df.columns)
 
+        def _insert(client, buf: list) -> None:
+            rows = [r.asDict(recursive=True) for r in buf]
+            batch_settings = dict(settings)
+            if auto_token:
+                batch_settings["insert_deduplication_token"] = (
+                    content_dedup_token(table, rows, names)
+                )
+            client.insert(table, names, rows, batch_settings)
+
         def _insert_partition(rows_iter):
-            from log2ck_spark.native import NativeClient as _NC
-
-            client = _NC(
-                host, port, database=database, user=user,
-                password=password, timeout_s=timeout_s,
-            )
-            client.connect()
-            try:
-                buf: list = []
-
-                def _flush():
-                    rows = [r.asDict(recursive=True) for r in buf]
-                    batch_settings = dict(settings)
-                    if dedup_token and (
-                        "insert_deduplication_token" not in batch_settings
-                    ):
-                        batch_settings["insert_deduplication_token"] = (
-                            content_dedup_token(table, rows, names)
-                        )
-                    client.insert(table, names, rows, batch_settings)
-
-                for r in rows_iter:
-                    buf.append(r)
-                    if len(buf) >= batch_size:
-                        _flush()
-                        buf = []
-                if buf:
-                    _flush()
-            finally:
-                client.close()
-
-        batch_df.rdd.foreachPartition(_insert_partition)
-
-    return _write
-
-
-def clickhouse_writer(sink: SinkConfig) -> Callable[[DataFrame, int], None]:
-    """ClickHouse sink (reference A10: native-TCP batch insert,
-    `Worker.php:71-80,:123`). Gated on an optional client lib; inserts
-    happen per-partition on executors via a connection each — the
-    Spark-shaped analog of the reference's persistent connection.
-    `dedup_token` (default true): a content-hash
-    `insert_deduplication_token` setting per flush — the same
-    idempotent-replay contract as the HTTP and native writers.
-    `drop_partition_col`: true | false | "auto" (default; consults a
-    driver-side DESCRIBE via the client lib)."""
-    try:
-        import clickhouse_connect  # type: ignore  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "clickhouse-connect not installed; use the parquet sink "
-            "(default) or install a ClickHouse client"
-        ) from e
-
-    # Resolve options at WRITER CREATION, not first micro-batch:
-    # writer_for's contract is fail-loudly-at-config-time (the http
-    # twin pops 'table' here too) — a missing 'table' must not start a
-    # stream that dies with KeyError on its first batch, and
-    # batch_size (valid for clickhouse_http) must feed the batcher,
-    # not leak into get_client() as a TypeError.
-    opts: dict[str, Any] = dict(sink.options)
-    table = _require_opt(opts, "table", "clickhouse")
-    batch_size = int(opts.pop("batch_size", CK_INSERT_BATCH))
-    ck_dedup_token = opts.pop("dedup_token", True)
-    if not isinstance(ck_dedup_token, bool):
-        raise ValueError(
-            f"clickhouse sink: dedup_token={ck_dedup_token!r} "
-            f"(expected true or false)"
-        )
-    drop_pc_opt = opts.pop("drop_partition_col", "auto")
-    if isinstance(drop_pc_opt, str):
-        if drop_pc_opt.lower() != "auto":
-            raise ValueError(
-                f"clickhouse sink: drop_partition_col={drop_pc_opt!r} "
-                f"(expected true, false, or 'auto')"
-            )
-        drop_pc_opt = "auto"
-    elif not isinstance(drop_pc_opt, bool):
-        raise ValueError(
-            f"clickhouse sink: drop_partition_col={drop_pc_opt!r} "
-            f"(expected true, false, or 'auto')"
-        )
-    _drop_layout: dict[str, Any] = {"fetched": False, "has_pc": False}
-
-    def _server_lists_pc(pc: str) -> bool:  # pragma: no cover
-        # 'auto' asks the server once (driver-side DESCRIBE via the
-        # same client lib) whether the partition column is a real
-        # insertable column; only the derived case is dropped —
-        # mirroring the HTTP writer's guard so a table that genuinely
-        # stores log_date keeps receiving it.
-        if not _drop_layout["fetched"]:
-            try:
-                client = clickhouse_connect.get_client(**opts)
-                try:
-                    res = client.query(f"DESCRIBE TABLE {table}")
-                    _drop_layout["has_pc"] = any(
-                        row[0] == pc
-                        and str(row[2] or "")
-                        not in ("MATERIALIZED", "ALIAS")
-                        for row in res.result_rows
-                    )
-                    _drop_layout["fetched"] = True
-                finally:
-                    client.close()
-            except Exception as e:  # noqa: BLE001
-                # fetched stays False: a TRANSIENT failure (one
-                # network blip on the first batch) must not lock in
-                # "drop the partition column" for the writer's whole
-                # lifetime — the next batch retries the DESCRIBE
-                # (mirrors the HTTP writer's guard; ADVICE r12)
-                import logging
-
-                logging.getLogger(__name__).warning(
-                    "clickhouse sink: DESCRIBE TABLE %s failed (%s); "
-                    "assuming partition column is derived and dropping "
-                    "it for THIS batch (will retry DESCRIBE next "
-                    "batch) — set drop_partition_col explicitly to "
-                    "silence this", table, e,
-                )
-        return bool(_drop_layout["has_pc"])
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:  # pragma: no cover
-        # Same derived-column rule as the HTTP writer: the parquet
-        # layout's log_date (materialized server-side in the reference
-        # DDL) must not reach the positional native insert — unless
-        # the user said otherwise or the server lists it insertable.
-        pc = sink.partition_col
-        if pc in batch_df.columns and "created_at" in batch_df.columns:
-            if drop_pc_opt is True or (
-                drop_pc_opt == "auto" and not _server_lists_pc(pc)
-            ):
-                batch_df = batch_df.drop(pc)
-
-        def _insert_partition(rows):
-            client = clickhouse_connect.get_client(**opts)
-            try:
-                insert_in_batches(
-                    client, table, rows, batch_size,
-                    dedup_token=ck_dedup_token,
-                )
-            finally:
-                client.close()
+            _connected(lambda client: _flush_in_batches(
+                rows_iter, lambda buf: _insert(client, buf), batch_size
+            ))
 
         batch_df.rdd.foreachPartition(_insert_partition)
 

@@ -1,61 +1,38 @@
-"""ClickHouse sink contract (A10) against a fake client — the real
-lib isn't in this environment, but the batching/lifecycle logic
-(reference Worker.php:71-80,123: buffer, one insert call per batch,
-connection reused across batches) must hold regardless."""
+"""ClickHouse sink contract (A10): the shared batching loop, the
+HTTP writer against a live local endpoint standing in for ClickHouse's
+HTTP interface, and the option/partition-column rules both ClickHouse
+writers share (reference Worker.php:71-80,123: buffer, one insert call
+per batch, connection reused across batches)."""
 
 from __future__ import annotations
 
 import os
-import sys
-import types
 
 import pytest
 
 from log2ck_spark.config import SinkConfig
-from log2ck_spark.sink import CK_INSERT_BATCH, clickhouse_writer, insert_in_batches
+from log2ck_spark.sink import CK_INSERT_BATCH, _flush_in_batches
 
 
-class FakeClient:
-    def __init__(self):
-        self.calls: list[tuple[str, int]] = []
-        self.closed = False
-
-    def insert(self, table, rows):
-        assert not self.closed, "insert after close"
-        self.calls.append((table, len(rows)))
-
-    def close(self):
-        self.closed = True
+def _sizes(items, **kw) -> "tuple[int, list[int]]":
+    flushed: list[int] = []
+    n = _flush_in_batches(items, lambda buf: flushed.append(len(buf)), **kw)
+    return n, flushed
 
 
-def test_insert_in_batches_flushes_at_batch_size():
-    client = FakeClient()
-    n = insert_in_batches(client, "logs", iter([(i, "x")] for i in range(25_000)))
+def test_flush_in_batches_flushes_at_batch_size():
+    n, flushed = _sizes(iter(range(25_000)), batch_size=CK_INSERT_BATCH)
     assert n == 25_000
-    assert [c[1] for c in client.calls] == [CK_INSERT_BATCH, CK_INSERT_BATCH, 5_000]
-    assert {c[0] for c in client.calls} == {"logs"}
+    assert flushed == [CK_INSERT_BATCH, CK_INSERT_BATCH, 5_000]
 
 
-def test_insert_in_batches_small_and_empty():
-    client = FakeClient()
-    assert insert_in_batches(client, "t", iter([[1], [2]])) == 2
-    assert [c[1] for c in client.calls] == [2]
-    client2 = FakeClient()
-    assert insert_in_batches(client2, "t", iter([])) == 0
-    assert client2.calls == []
+def test_flush_in_batches_small_and_empty():
+    assert _sizes(iter([1, 2]), batch_size=CK_INSERT_BATCH) == (2, [2])
+    assert _sizes(iter([]), batch_size=CK_INSERT_BATCH) == (0, [])
 
 
-def test_insert_in_batches_exact_multiple_no_trailing_flush():
-    client = FakeClient()
-    n = insert_in_batches(client, "t", iter([[i] for i in range(200)]), batch_size=100)
-    assert n == 200
-    assert [c[1] for c in client.calls] == [100, 100]
-
-
-def test_clickhouse_writer_raises_without_lib():
-    sys.modules.pop("clickhouse_connect", None)
-    with pytest.raises(NotImplementedError):
-        clickhouse_writer(SinkConfig(path="", options={"table": "logs"}))
+def test_flush_in_batches_exact_multiple_no_trailing_flush():
+    assert _sizes(iter(range(200)), batch_size=100) == (200, [100, 100])
 
 
 def test_writer_for_dispatches_on_kind():
@@ -65,12 +42,11 @@ def test_writer_for_dispatches_on_kind():
     assert callable(pq) and pq.__qualname__ == (
         foreach_batch_writer(SinkConfig(path="/x")).__qualname__
     )
-    with pytest.raises(NotImplementedError):  # no clickhouse lib here
-        writer_for(SinkConfig(path="", kind="clickhouse", options={"table": "t"}))
-    with pytest.raises(NotImplementedError):  # no delta lib here
-        writer_for(SinkConfig(path="/x", kind="delta"))
-    with pytest.raises(ValueError, match="unknown sink kind"):
-        writer_for(SinkConfig(path="/x", kind="kafka"))
+    # the clickhouse-connect and delta backends are gone: their kinds
+    # are unknown at config time, like any other typo
+    for kind in ("clickhouse", "delta", "kafka"):
+        with pytest.raises(ValueError, match="unknown sink kind"):
+            writer_for(SinkConfig(path="/x", kind=kind, options={"table": "t"}))
 
 
 def test_memory_sink_collects_rows(spark):
@@ -206,35 +182,23 @@ def test_layout_mismatch_fails_fast(spark, tmp_path):
     assert spark.read.parquet(q).count() == 2
 
 
-def test_clickhouse_writer_constructs_with_fake_lib(monkeypatch):
-    fake = types.ModuleType("clickhouse_connect")
-    fake.get_client = lambda **kw: FakeClient()
-    monkeypatch.setitem(sys.modules, "clickhouse_connect", fake)
-    writer = clickhouse_writer(
-        SinkConfig(path="", options={"table": "logs", "host": "h"})
-    )
-    assert callable(writer)
-
-
-def test_missing_mandatory_option_raises_descriptive_valueerror(monkeypatch):
+def test_missing_mandatory_option_raises_descriptive_valueerror():
     """writer_for's contract is fail-loudly-at-CONFIG-time with a
     descriptive ValueError — a missing 'table' must not surface as a
-    bare KeyError('table')."""
-    from log2ck_spark.sink import clickhouse_http_writer
+    bare KeyError('table'). Both ClickHouse writers run the same
+    validator, before any connection is attempted."""
+    from log2ck_spark.sink import writer_for
 
-    fake = types.ModuleType("clickhouse_connect")
-    fake.get_client = lambda **kw: FakeClient()
-    monkeypatch.setitem(sys.modules, "clickhouse_connect", fake)
-    with pytest.raises(ValueError, match="clickhouse sink requires a 'table'"):
-        clickhouse_writer(SinkConfig(path="", options={"host": "h"}))
-    with pytest.raises(
-        ValueError, match="clickhouse_http sink requires a 'table'"
-    ):
-        clickhouse_http_writer(SinkConfig(path="", options={"url": "u"}))
-    with pytest.raises(
-        ValueError, match="clickhouse_http sink requires a 'url'"
-    ):
-        clickhouse_http_writer(SinkConfig(path="", options={"table": "t"}))
+    for kind, endpoint in (("clickhouse_http", "url"), ("clickhouse_native", "host")):
+        def _writer(**opts):
+            return writer_for(SinkConfig(path="", kind=kind, options=opts))
+
+        with pytest.raises(ValueError, match=f"{kind} sink requires a 'table'"):
+            _writer(**{endpoint: "h"})
+        with pytest.raises(ValueError, match=f"{kind} sink requires a '{endpoint}'"):
+            _writer(table="t")
+        with pytest.raises(ValueError, match=f"{kind} sink: dedup_token="):
+            _writer(**{endpoint: "h", "table": "t", "dedup_token": "yes"})
 
 
 class _RecordingCKServer:
@@ -697,56 +661,6 @@ def test_gzip_stream_sink_end_to_end(spark, tmp_path):
         srv.close()
 
 
-def test_clickhouse_connect_live_insert_end_to_end(spark):
-    """The native-protocol writer (writer_for('clickhouse')) against a
-    REAL server — the one shipped code path with no live evidence in
-    this sandbox (clickhouse-connect cannot be installed here; its
-    batching/lifecycle is fake-client-tested above). Any environment
-    that has BOTH the lib and a reachable server (set
-    LOG2CK_TEST_CLICKHOUSE_DSN, e.g. "http://localhost:8123") runs the
-    full path: create table → stream a batch through the writer →
-    count rows back. Skipped, never silently absent, elsewhere."""
-    import os
-    import uuid
-
-    clickhouse_connect = pytest.importorskip("clickhouse_connect")
-    dsn = os.environ.get("LOG2CK_TEST_CLICKHOUSE_DSN")
-    if not dsn:
-        pytest.skip("LOG2CK_TEST_CLICKHOUSE_DSN not set (no live server)")
-
-    from urllib.parse import urlparse
-
-    from log2ck_spark.sink import writer_for
-
-    u = urlparse(dsn)
-    admin = clickhouse_connect.get_client(
-        host=u.hostname, port=u.port or 8123
-    )
-    table = f"log2ck_live_{uuid.uuid4().hex[:8]}"
-    admin.command(
-        f"CREATE TABLE {table} (k Int64, msg String)"
-        " ENGINE = MergeTree ORDER BY k"
-    )
-    try:
-        writer = writer_for(
-            SinkConfig(
-                kind="clickhouse",
-                options={
-                    "table": table,
-                    "host": u.hostname,
-                    "port": u.port or 8123,
-                },
-            )
-        )
-        df = spark.createDataFrame(
-            [(i, f"m{i}") for i in range(257)], "k long, msg string"
-        )
-        writer(df, 0)
-        assert admin.command(f"SELECT count() FROM {table}") == 257
-    finally:
-        admin.command(f"DROP TABLE IF EXISTS {table}")
-
-
 def test_byte_bounded_flush_triggers_before_row_count():
     """max_body_bytes: batch_size counts ROWS; a jumbo-row stream must
     flush on BYTES before the body grows toward CK's HTTP limit (and
@@ -1087,62 +1001,66 @@ def test_log_date_kept_on_json_each_row_when_server_lists_it(spark):
 def test_drop_partition_col_option_forces_and_validates(spark):
     """drop_partition_col=True drops even when the server lists the
     column (explicit user intent beats auto); False keeps it with no
-    DESCRIBE round-trip; a junk value fails at writer creation."""
+    DESCRIBE round-trip; a junk value fails at writer creation. Both
+    ClickHouse writers share the validator and the rule."""
     import datetime as dt
 
-    import pytest as _pytest
-
     from log2ck_spark.sink import writer_for
+    from tests.test_native_tcp import FakeNativeServer
 
     describe = (
         "created_at\tDateTime\t\t\t\t\t\n"
         "log_date\tDate\t\t\t\t\t\n"
         "message\tString\t\t\t\t\t\n"
     )
-    srv = _RecordingCKServer(describe_tsv=describe)
+    http = _RecordingCKServer(describe_tsv=describe)
+    native = FakeNativeServer(
+        [("created_at", "DateTime"), ("log_date", "Date"), ("message", "String")]
+    )
+    # kind, endpoint options, last inserted row, DESCRIBE requests so far
+    transports = (
+        (
+            "clickhouse_http", {"url": http.url},
+            lambda: http.rows()[-1], lambda: len(http.gets),
+        ),
+        (
+            "clickhouse_native", {"host": native.host, "port": native.port},
+            lambda: native.inserts[-1]["rows"][0], lambda: len(native.selects),
+        ),
+    )
     try:
         df = spark.createDataFrame(
             [(dt.datetime(2024, 1, 1, 10, 0, 0), dt.date(2024, 1, 1), "m")],
             "created_at timestamp, log_date date, message string",
         ).coalesce(1)
-        w_true = writer_for(
-            SinkConfig(
-                kind="clickhouse_http",
-                options={
-                    "url": srv.url, "table": "logs",
-                    "drop_partition_col": True,
-                },
-            )
-        )
-        w_true(df, 0)
-        assert "log_date" not in srv.rows()[-1]
-
-        w_false = writer_for(
-            SinkConfig(
-                kind="clickhouse_http",
-                options={
-                    "url": srv.url, "table": "logs",
-                    "drop_partition_col": False,
-                },
-            )
-        )
-        n_gets = len(srv.gets)
-        w_false(df, 1)
-        assert "log_date" in srv.rows()[-1]
-        assert len(srv.gets) == n_gets  # no DESCRIBE needed
-
-        with _pytest.raises(ValueError, match="drop_partition_col"):
-            writer_for(
-                SinkConfig(
-                    kind="clickhouse_http",
-                    options={
-                        "url": srv.url, "table": "logs",
-                        "drop_partition_col": "sometimes",
-                    },
+        for kind, endpoint, last_row, n_describes in transports:
+            def _writer(drop):
+                return writer_for(
+                    SinkConfig(
+                        kind=kind,
+                        options={
+                            **endpoint, "table": "logs",
+                            "drop_partition_col": drop,
+                        },
+                    )
                 )
-            )
+
+            _writer(True)(df, 0)
+            assert "log_date" not in last_row(), kind
+
+            w_false = _writer(False)
+            before = n_describes()
+            w_false(df, 1)
+            assert "log_date" in last_row(), kind
+            assert n_describes() == before, kind  # no DESCRIBE needed
+
+            with pytest.raises(
+                ValueError, match=f"{kind} sink: drop_partition_col"
+            ):
+                _writer("sometimes")
     finally:
-        srv.close()
+        http.close()
+        native.close()
 
 
 def test_describe_tsv_unescapes_quoted_type_arguments():
@@ -1180,43 +1098,6 @@ def test_tsv_unescape_control_sequences():
     assert _tsv_unescape(r"a\tb\nc\\d\0e") == "a\tb\nc\\d\0e"
     assert _tsv_unescape("plain") == "plain"
     assert _tsv_unescape("trailing\\") == "trailing\\"
-
-
-def test_insert_in_batches_dedup_token_same_batch_same_token():
-    """The optional-lib path honors the same idempotent-replay
-    contract as the HTTP/native writers: identical batch content
-    derives an identical insert_deduplication_token, distinct batches
-    distinct tokens; dedup_token=False keeps the 2-arg legacy call."""
-
-    class SettingsClient:
-        def __init__(self):
-            self.calls = []
-
-        def insert(self, table, rows, settings=None):
-            self.calls.append((table, [list(r) for r in rows], settings))
-
-    c = SettingsClient()
-    insert_in_batches(
-        c, "t", iter([[1, "a"], [2, "b"], [3, "c"]]),
-        batch_size=2, dedup_token=True,
-    )
-    assert len(c.calls) == 2
-    t1 = c.calls[0][2]["insert_deduplication_token"]
-    t2 = c.calls[1][2]["insert_deduplication_token"]
-    assert len(t1) == 64 and t1 != t2
-
-    # a replay of the same batch content derives the same token
-    c2 = SettingsClient()
-    insert_in_batches(
-        c2, "t", iter([[1, "a"], [2, "b"]]), batch_size=2,
-        dedup_token=True,
-    )
-    assert c2.calls[0][2]["insert_deduplication_token"] == t1
-
-    # default: legacy 2-arg contract, no settings kwarg
-    legacy = FakeClient()
-    insert_in_batches(legacy, "t", iter([[1]]))
-    assert legacy.calls == [("t", 1)]
 
 
 def test_unknown_token_setting_downgrades_instead_of_failing():
@@ -1346,43 +1227,59 @@ def test_genuine_4xx_still_raises_with_token_on():
         httpd.server_close()
 
 
-def test_describe_failure_is_retried_next_batch(monkeypatch):
+def test_describe_failure_is_retried_next_batch():
     """A transient DESCRIBE failure on the first batch must not lock
     in the drop-partition-column rule for the writer's lifetime: the
-    layout cache keeps fetched=False on exception so the NEXT batch
-    re-DESCRIBEs and resolves correctly (ADVICE r12)."""
-    import log2ck_spark.sink as sink_mod
-    from log2ck_spark.config import SinkConfig
-    from log2ck_spark.sink import clickhouse_http_writer
+    writers' shared DESCRIBE cache keeps nothing on failure, so the
+    NEXT batch re-DESCRIBEs and resolves correctly, while a success is
+    cached (ADVICE r12). Checked over both transports' describe
+    callables."""
+    from log2ck_spark.native import NativeClient
+    from log2ck_spark.sink import _TableColumns, describe_table_columns
+    from tests.test_native_tcp import FakeNativeServer
 
-    calls = {"n": 0}
-
-    def flaky_describe(url, table, **kw):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise ConnectionError("blip")
-        return {"k": "Int64", "log_date": "Date"}
-
-    monkeypatch.setattr(
-        sink_mod, "describe_table_columns", flaky_describe
+    http = _RecordingCKServer()  # no describe_tsv: DESCRIBE answers 404
+    native = FakeNativeServer(
+        [("k", "Int64"), ("log_date", "Date")],
+        exception_on_query="Code: 999. DB::Exception: blip",
     )
-    # Reach the lazy _server_lists_pc closure via the writer factory.
-    w = clickhouse_http_writer(
-        SinkConfig(
-            path="", kind="clickhouse_http",
-            options={"url": "http://h:8123", "table": "t"},
-        )
+    client = NativeClient(native.host, native.port)
+    client.connect()
+
+    def _heal_http():
+        http.describe_tsv = "k\tInt64\t\t\t\t\t\nlog_date\tDate\t\t\t\t\t\n"
+
+    def _heal_native():
+        native.exception_on_query = None
+
+    transports = (
+        (
+            "clickhouse_http",
+            lambda: describe_table_columns(http.url, "t"), _heal_http,
+        ),
+        (
+            "clickhouse_native",
+            lambda: client.describe_insertable_columns("t"), _heal_native,
+        ),
     )
-    lists_pc = None
-    for cell in w.__closure__ or ():
-        v = cell.cell_contents
-        if callable(v) and getattr(v, "__name__", "") == "_server_lists_pc":
-            lists_pc = v
-    assert lists_pc is not None, "writer layout closure not found"
-    # batch 1: DESCRIBE blips -> fall back (False) but DON'T cache
-    assert lists_pc("log_date") is False
-    # batch 2: retried DESCRIBE succeeds -> correct answer
-    assert lists_pc("log_date") is True
-    # batch 3: success IS cached -> no third DESCRIBE
-    assert lists_pc("log_date") is True
-    assert calls["n"] == 2
+    try:
+        for kind, describe, heal in transports:
+            calls: list[int] = []
+
+            def _counted():
+                calls.append(1)
+                return describe()
+
+            table_cols = _TableColumns(kind, "t", _counted)
+            # batch 1: DESCRIBE blips -> fall back (False) but DON'T cache
+            assert table_cols.lists("log_date") is False, kind
+            heal()
+            # batch 2: retried DESCRIBE succeeds -> correct answer
+            assert table_cols.lists("log_date") is True, kind
+            # batch 3: success IS cached -> no third DESCRIBE
+            assert table_cols.lists("log_date") is True, kind
+            assert len(calls) == 2, kind
+    finally:
+        client.close()
+        http.close()
+        native.close()

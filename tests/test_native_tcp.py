@@ -770,10 +770,11 @@ def test_native_describe_returns_insertable_columns():
 
 
 def test_native_auto_drop_consults_describe(spark):
-    """drop_partition_col='auto' (the default) resolves over the probe
-    connection: the derived log_date is dropped when the server
-    MATERIALIZES it, kept when the table genuinely stores it — the
-    same guard as the HTTP writer, now on the native path."""
+    """drop_partition_col='auto' (the default) resolves through a
+    DESCRIBE over the native read path: the derived log_date is
+    dropped when the server MATERIALIZES it, kept when the table
+    genuinely stores it — the same guard and cache as the HTTP
+    writer."""
     import datetime as dt
 
     from log2ck_spark.config import SinkConfig

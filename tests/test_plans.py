@@ -177,11 +177,19 @@ def test_q19_disjunction_stays_equi_join(spark, sf_dir):
     assert "BroadcastHashJoin" in plan or "SortMergeJoin" in plan
 
 
-def test_q21_exists_chain_is_semi_and_anti(spark, sf_dir):
+def test_q21_exists_chain_is_one_scan_and_window(spark, sf_dir):
+    """The EXISTS / NOT EXISTS chain compiles to ONE (orderkey,
+    suppkey) aggregation of lineitem plus a partition-only window
+    giving the per-order supplier count (ns) and returned-supplier
+    count (nrs) — no semi/anti join against re-scanned pair sets."""
     plan = _plan(spark, "tpch_q21_waiting_supplier", sf_dir)
-    assert "LeftSemi" in plan, plan[:2000]
-    assert "LeftAnti" in plan, plan[:2000]
-    assert "CartesianProduct" not in plan
+    scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
+    assert sum("/lineitem.parquet]" in ln for ln in scans) == 1, plan[:4000]
+    windows = [ln for ln in plan.splitlines() if "Window [" in ln]
+    assert any(" AS ns#" in ln for ln in windows), plan[:4000]
+    assert any(" AS nrs#" in ln for ln in windows), plan[:4000]
+    for op in ("LeftSemi", "LeftAnti", "CartesianProduct"):
+        assert op not in plan, (op, plan[:4000])
 
 
 def test_q13_left_outer_preserved(spark, sf_dir):

@@ -12,6 +12,8 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from log2ck_spark.queries.pipelineops import _min_label_cc
@@ -84,12 +86,13 @@ def test_corpus_dim_memo_hits_and_invalidates(spark, tmp_path):
     # keyless probe never touches the memo
     assert sim._corpus_dim(e, None) == 8
     # rewrite the table -> new identity key -> fresh probe
-    import time as _time
-
-    _time.sleep(0.05)  # mtime_ns tick
     spark.createDataFrame(
         [(0, [1.0] * 16)], "vec_id long, embedding array<float>"
     ).write.mode("overwrite").parquet(p + "/embeddings.parquet")
+    # a coarse filesystem clock can give the rewrite the old mtime:
+    # move it past the first write's explicitly instead of sleeping
+    bumped = key[1] + 1_000_000_000
+    os.utime(p + "/embeddings.parquet", ns=(bumped, bumped))
     key2 = table_key(p, "embeddings")
     assert key2 != key
     e2 = (
