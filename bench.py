@@ -116,6 +116,76 @@ HEADLINE = [
 ]
 
 
+def noop_s(build) -> float:
+    """Seconds to build a DataFrame with ``build()`` and force it
+    end-to-end through the noop sink (full computation, no collect
+    cost)."""
+    t0 = time.time()
+    build().write.format("noop").mode("overwrite").save()
+    return time.time() - t0
+
+
+def best_of(run, n: int, patience: "int | None" = None, gain: float = 0.0):
+    """(min, times) over up to ``n`` calls of ``run()``, which returns
+    the seconds it measured. With ``patience``, stop once that many
+    runs in a row failed to beat the running min by more than the
+    fraction ``gain``."""
+    best, times, stale = float("inf"), [], 0
+    for _ in range(n):
+        t = run()
+        times.append(t)
+        stale = 0 if t < best * (1 - gain) else stale + 1
+        best = min(best, t)
+        if patience is not None and stale >= patience:
+            break
+    return best, times
+
+
+def drain_ingest(spark, sf_dir: str, name: str) -> "tuple[str, float]":
+    """Drain the staged monolog corpus of ``sf_dir`` through the
+    PRODUCTION ingest dataflow — streaming file source → regex parse →
+    validity split → enrichment → date-partitioned parquet sink via
+    the foreachBatch batch writer — under Trigger.AvailableNow, which
+    drains the whole backlog and terminates deterministically. The
+    output (sink + checkpoint, keyed by ``name``) is wiped first so
+    every drain ingests from zero. Only start → awaitTermination is on
+    the clock. Returns (sink path, seconds)."""
+    import shutil
+
+    from log2ck_spark.config import EngineConfig, SinkConfig, TailSpec
+    from log2ck_spark.io import ensure_staged, scratch_dir
+    from log2ck_spark.pipeline import stream_pipeline
+    from log2ck_spark.queries.ingest import monolog_lines
+    from log2ck_spark.sink import writer_for
+
+    corpus = ensure_staged(
+        scratch_dir(sf_dir, "monolog_corpus"),
+        lambda p: monolog_lines(spark, sf_dir).write.mode("overwrite").text(p),
+    )
+    out_root = scratch_dir(sf_dir, name)
+    shutil.rmtree(out_root, ignore_errors=True)
+    sink = SinkConfig(path=os.path.join(out_root, "sink"))
+    tail = TailSpec(name=name, path=corpus)
+    config = EngineConfig(
+        tails=[tail],
+        sink=sink,
+        checkpoint_root=os.path.join(out_root, "ckpt"),
+    )
+    rows, _dead = stream_pipeline(spark, config, tail)
+    t0 = time.time()
+    query = (
+        rows.writeStream.foreachBatch(writer_for(sink))
+        .option(
+            "checkpointLocation",
+            os.path.join(config.checkpoint_root, tail.name),
+        )
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination()
+    return sink.path, time.time() - t0
+
+
 def main() -> None:
     # --smoke: the executed-path gate the r7 crash proved necessary —
     # the SAME main path (calib, warmup, measure, regression detect,
@@ -177,24 +247,13 @@ def main() -> None:
     # cross-round calib ratio inherits that noise. Stop only when the
     # min has plateaued: 4 consecutive reps without >3% improvement,
     # capped at 16 reps (~2 s total — the anchor itself is ~0.15 s).
-    calib = None
+    def anchor() -> float:
+        t0 = time.time()
+        spark.range(100_000_000).selectExpr("bit_xor(xxhash64(id))").collect()
+        return time.time() - t0
+
     try:
-        best = float("inf")
-        stale = 0
-        for _ in range(16):
-            t0 = time.time()
-            spark.range(100_000_000).selectExpr(
-                "bit_xor(xxhash64(id))"
-            ).collect()
-            t = time.time() - t0
-            if t < best * 0.97:
-                best, stale = t, 0
-            else:
-                best = min(best, t)
-                stale += 1
-                if stale >= 4:
-                    break
-        calib = round(best, 3)
+        calib = round(best_of(anchor, 16, patience=4, gain=0.03)[0], 3)
     except Exception:
         calib = None
 
@@ -217,22 +276,18 @@ def main() -> None:
     # measured its compiled classes are gone and the measurement pays
     # janino again (observed as 1.5-2x noise on the expression-heavy
     # dedup pipelines as the headline set grew).
+    def min_of_3(name: str, d: str) -> float:
+        best, _ = best_of(lambda: noop_s(lambda: QUERIES[name](spark, d)), 3)
+        return round(best, 3)
+
     timings: dict[str, float] = {}
     for name in headline:
         if os.path.isdir(warm_dir) and not smoke:
             try:
-                QUERIES[name](spark, warm_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
+                noop_s(lambda: QUERIES[name](spark, warm_dir))
             except Exception:
                 pass
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.time()
-            df = QUERIES[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.time() - t0)
-        timings[name] = round(best, 3)
+        timings[name] = min_of_3(name, sf_dir)
         # Measurement hygiene (r13): queries that persist() an
         # intermediate never unpersist it — the DataFrame dies in
         # Python but CacheManager keeps the cached RDD alive, so 60+
@@ -267,15 +322,8 @@ def main() -> None:
         for name in sorted(QUERIES):
             if name in timings:
                 continue
-            best = float("inf")
             try:
-                for _ in range(3):
-                    t0 = time.time()
-                    QUERIES[name](spark, warm_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    best = min(best, time.time() - t0)
-                registry[name] = round(best, 3)
+                registry[name] = min_of_3(name, warm_dir)
             except Exception:
                 registry[name] = -1.0  # failed: surface, don't hide
             spark.catalog.clearCache()  # same hygiene as the headline loop
@@ -339,14 +387,7 @@ def main() -> None:
         if name not in QUERIES or not os.path.isdir(q_dir):
             continue
         try:
-            best = float("inf")
-            for _ in range(3):
-                t0 = time.time()
-                QUERIES[name](spark, q_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                best = min(best, time.time() - t0)
-            rec["isolated"] = round(best, 3)
+            rec["isolated"] = min_of_3(name, q_dir)
             prev_t = rec.get("prev")
             if prev_t:
                 rec["isolated_norm"] = round(
@@ -614,71 +655,34 @@ def final_line_json(line: dict) -> str:
 
 
 def measure_ingest_throughput(spark, sf_dir: str) -> "dict | None":
-    """Sustained rows/sec through the PRODUCTION ingestion dataflow:
-    staged monolog text files → streaming file source → regex parse →
-    validity split → enrichment → date-partitioned parquet sink via
-    the foreachBatch batch writer — the reference Worker's full line
-    path (tail → preg_match → batch insert, Worker.php:101-148) as one
-    Structured Streaming query under Trigger.AvailableNow, which
-    drains the whole backlog and terminates deterministically.
+    """Sustained rows/sec through the PRODUCTION ingestion dataflow
+    (`drain_ingest`): the reference Worker's full line path (tail →
+    preg_match → batch insert, Worker.php:101-148) as one Structured
+    Streaming query.
 
     Reported rows are the VALID rows that landed in the sink (what a
     downstream reader can query), so the rate includes the cost of
     parsing, rejecting the dead-letter fraction, enrichment, and the
-    partitioned write — not just source scanning. The checkpoint and
-    sink are wiped before EACH iteration so every drain re-ingests
-    from zero; min over a plateau loop of 2-4 drains (see below —
-    a single drain measures anywhere in a 2.4x band run-to-run, and a
-    fixed min-of-2 can land entirely inside one host-contention
-    phase)."""
-    import shutil
+    partitioned write — not just source scanning. Every drain
+    re-ingests from zero; min over a plateau loop of 2-4 drains (see
+    below — a single drain measures anywhere in a 2.4x band
+    run-to-run, and a fixed min-of-2 can land entirely inside one
+    host-contention phase)."""
+    sink_path = None
 
-    from log2ck_spark.config import EngineConfig, SinkConfig, TailSpec
-    from log2ck_spark.io import ensure_staged, scratch_dir
-    from log2ck_spark.pipeline import stream_pipeline
-    from log2ck_spark.queries.ingest import monolog_lines
-    from log2ck_spark.sink import writer_for
+    def drain() -> float:
+        nonlocal sink_path
+        sink_path, secs = drain_ingest(spark, sf_dir, "bench_ingest")
+        return secs
 
-    corpus = ensure_staged(
-        scratch_dir(sf_dir, "monolog_corpus"),
-        lambda p: monolog_lines(spark, sf_dir).write.mode("overwrite").text(p),
-    )
-    out_root = scratch_dir(sf_dir, "bench_ingest")
-    sink = SinkConfig(path=os.path.join(out_root, "sink"))
-    tail = TailSpec(name="bench-ingest", path=corpus)
-    config = EngineConfig(
-        tails=[tail],
-        sink=sink,
-        checkpoint_root=os.path.join(out_root, "ckpt"),
-    )
     # Plateau loop, same rationale as the calib anchor: a fixed
     # min-of-2 records a stall when BOTH drains land in the same
     # ambient-contention phase (observed r8: 11.9 s recorded against a
     # 3.8 s quiet-host best, a 3x artifact of host timing alone). Keep
     # draining until a drain fails to improve the min by >10%, at
     # least 2 drains, capped at 4 — quiet hosts exit after 2.
-    best = float("inf")
-    n = 0
-    for i in range(4):
-        shutil.rmtree(out_root, ignore_errors=True)
-        rows, _dead = stream_pipeline(spark, config, tail)
-        t0 = time.time()
-        query = (
-            rows.writeStream.foreachBatch(writer_for(sink))
-            .option(
-                "checkpointLocation",
-                os.path.join(config.checkpoint_root, tail.name),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-        t = time.time() - t0
-        improved = t < best * 0.9
-        best = min(best, t)
-        n = spark.read.parquet(sink.path).count()
-        if i >= 1 and not improved:
-            break
+    best, _ = best_of(drain, 4, patience=1, gain=0.10)
+    n = spark.read.parquet(sink_path).count()
     if best <= 0 or n <= 0:
         return None
     return {

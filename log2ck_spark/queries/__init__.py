@@ -93,6 +93,17 @@ ROTATION_FIRST: tuple[str, ...] = (
     # cramers_v), then the 25 r9-latest names, then the oldest r10
     # tier.
     # Target state after r13: no name's latest driver row predates r10.
+    #
+    # 2026-10-17 (r15 window): pin the queries whose plans changed in
+    # r14 (q21's single-scan rewrite, the fused connected-components
+    # rounds, the memoized LSH width probe, the pinned jaccard verify
+    # filter). q21 also changed its NULL-supplier semantics this round.
+    # Release these pins once each has a green CORRECTNESS_r15 row.
+    "tpch_q21_waiting_supplier",
+    "dedup_clusters",
+    "similarity_lsh",
+    "dedup_embedding_lsh",
+    "dedup_ngram_jaccard",
 )
 
 

@@ -699,9 +699,15 @@ def tpch_q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     numwait, which is what COUNT(*) over qualifying l1 rows summed.
     Lineitem scans 3 → 1; the orders filter join is unchanged. Top-10
     via TakeOrderedAndProject with an s_name tie-break for a
-    deterministic result set."""
+    deterministic result set.
+
+    NULL suppliers are dropped before the pair aggregation: the
+    oracle's `l_suppkey <> l1.l_suppkey` is never true against a NULL,
+    so a NULL-supplier line is neither another supplier (ns) nor
+    another returning supplier (nrs)."""
     per_pair = (
         tbl(spark, sf_dir, "lineitem")
+        .filter(F.col("l_suppkey").isNotNull())
         .groupBy("l_orderkey", "l_suppkey")
         .agg(
             F.count(F.when(F.col("l_returnflag") == "R", True)).alias("r_lines")

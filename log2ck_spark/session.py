@@ -16,17 +16,6 @@ from pyspark.sql import SparkSession
 SCRATCH = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", ".scratch")
 
 
-def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable conf to an existing session (e.g. the
-    driver's). Only touches conf that is safe to set post-start."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    return spark
-
-
 def get_spark(app_name: str = "log2ck_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)

@@ -23,12 +23,12 @@ from __future__ import annotations
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from log2ck_spark.queries import QUERIES, load_all  # noqa: E402
 from log2ck_spark.session import get_spark  # noqa: E402
+from scripts.scaling_probe import sweep  # noqa: E402
 
 SRC = "/root/testdata/sf0.1"
 NAMES = ["dedup_minhash_lsh", "dedup_simhash", "dedup_clusters"]
@@ -68,34 +68,18 @@ def build_sf1(spark, out_dir: str) -> None:
 def main() -> None:
     load_all()
     spark = get_spark("dedup-sf1-probe")
+    # the corpus dir's basename labels its column in the sweep table
     scratch = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "spark-warehouse", "sf1_dedup_probe",
+        "spark-warehouse", "sf1_dedup_probe", "sf1",
     )
     shutil.rmtree(scratch, ignore_errors=True)
     os.makedirs(scratch, exist_ok=True)
     build_sf1(spark, scratch)
     n = spark.read.parquet(os.path.join(scratch, "documents.parquet")).count()
     print(f"synthetic corpus: {n} docs ({REPLICAS}x sf0.1)")
-
-    # warm codegen off the clock
-    for name in NAMES:
-        QUERIES[name](spark, SRC).write.format("noop").mode("overwrite").save()
-
-    print(f"{'query':24s} {'sf0.1':>8s} {'sf1':>8s} {'growth':>7s}")
-    for name in NAMES:
-        ts = []
-        for d in (SRC, scratch):
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.time()
-                QUERIES[name](spark, d).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                best = min(best, time.time() - t0)
-            ts.append(best)
-        print(f"{name:24s} {ts[0]:8.2f} {ts[1]:8.2f} {ts[1] / ts[0]:6.2f}x")
-    shutil.rmtree(scratch, ignore_errors=True)
+    sweep(spark, {name: QUERIES[name] for name in NAMES}, [SRC, scratch])
+    shutil.rmtree(os.path.dirname(scratch), ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -24,12 +24,12 @@ from __future__ import annotations
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from log2ck_spark.queries import QUERIES, load_all  # noqa: E402
 from log2ck_spark.session import get_spark  # noqa: E402
+from scripts.scaling_probe import sweep  # noqa: E402
 
 SRC = "/root/testdata/sf0.1"
 NAMES = [
@@ -136,9 +136,10 @@ def dedup_lsh_production(spark, sf_dir: str):
 def main() -> None:
     load_all()
     spark = get_spark("embedding-sf1-probe")
+    # the corpus dir's basename labels its column in the sweep table
     scratch = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "spark-warehouse", "sf1_embedding_probe",
+        "spark-warehouse", "sf1_embedding_probe", "sf1",
     )
     shutil.rmtree(scratch, ignore_errors=True)
     os.makedirs(scratch, exist_ok=True)
@@ -147,44 +148,11 @@ def main() -> None:
         os.path.join(scratch, "embeddings.parquet")
     ).count()
     print(f"synthetic corpus: {n} vectors ({REPLICAS}x sf0.1)")
-
-    # warm codegen off the clock
-    for name in NAMES:
-        QUERIES[name](spark, SRC).write.format("noop").mode(
-            "overwrite"
-        ).save()
-
-    print(f"{'query':24s} {'sf0.1':>8s} {'sf1':>8s} {'growth':>7s}")
-    for name in NAMES:
-        ts = []
-        for d in (SRC, scratch):
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.time()
-                QUERIES[name](spark, d).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                best = min(best, time.time() - t0)
-            ts.append(best)
-        print(f"{name:24s} {ts[0]:8.2f} {ts[1]:8.2f} {ts[1] / ts[0]:6.2f}x")
-
+    builds = {name: QUERIES[name] for name in NAMES}
     # the production-configured LSH variant (see dedup_lsh_production)
-    dedup_lsh_production(spark, SRC).write.format("noop").mode(
-        "overwrite"
-    ).save()  # warm
-    ts = []
-    for d in (SRC, scratch):
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            dedup_lsh_production(spark, d).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            best = min(best, time.time() - t0)
-        ts.append(best)
-    name = "dedup_lsh_prod_cfg"
-    print(f"{name:24s} {ts[0]:8.2f} {ts[1]:8.2f} {ts[1] / ts[0]:6.2f}x")
-    shutil.rmtree(scratch, ignore_errors=True)
+    builds["dedup_lsh_prod_cfg"] = dedup_lsh_production
+    sweep(spark, builds, [SRC, scratch])
+    shutil.rmtree(os.path.dirname(scratch), ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -12,10 +12,10 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import best_of, noop_s  # noqa: E402
 from log2ck_spark.queries import QUERIES, load_all  # noqa: E402
 from log2ck_spark.session import get_spark  # noqa: E402
 
@@ -30,34 +30,18 @@ def boot(cpus: int = 32):
     return spark
 
 
-def noop(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
+def _report(label: str, n: int, build) -> float:
+    best, times = best_of(lambda: noop_s(build), n)
+    print(f"{label}: min {best:.3f}  runs {[round(x, 3) for x in times]}")
+    return best
 
 
 def tdf(df, n: int = 3, label: str = "df") -> float:
-    best = float("inf")
-    times = []
-    for _ in range(n):
-        t0 = time.time()
-        noop(df)
-        dt = time.time() - t0
-        times.append(round(dt, 3))
-        best = min(best, dt)
-    print(f"{label}: min {best:.3f}  runs {times}")
-    return best
+    return _report(label, n, lambda: df)
 
 
 def t(name: str, n: int = 3, spark=None, sf: str | None = None) -> float:
     from pyspark.sql import SparkSession
 
     spark = spark or SparkSession.getActiveSession()
-    best = float("inf")
-    times = []
-    for _ in range(n):
-        t0 = time.time()
-        noop(QUERIES[name](spark, sf or SF))
-        dt = time.time() - t0
-        times.append(round(dt, 3))
-        best = min(best, dt)
-    print(f"{name}: min {best:.3f}  runs {times}")
-    return best
+    return _report(name, n, lambda: QUERIES[name](spark, sf or SF))

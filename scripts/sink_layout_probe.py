@@ -5,7 +5,8 @@ range grow (SCALE.md "r9: dated-sink layout").
 For each SF it stages the monolog corpus, drains it through the
 PRODUCTION streaming path (regex parse → validity split → enrichment
 → `sink.write_batch` via foreachBatch, Trigger.AvailableNow — the
-same dataflow bench.py's ingest metric times), then reports:
+same `bench.drain_ingest` that bench.py's ingest metric times), then
+reports:
 
     rows, distinct log_date partitions, parquet data files,
     files-per-date, and the drain wall time.
@@ -23,18 +24,12 @@ from __future__ import annotations
 
 import glob
 import os
-import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from log2ck_spark.config import EngineConfig, SinkConfig, TailSpec  # noqa: E402
-from log2ck_spark.io import ensure_staged, scratch_dir  # noqa: E402
-from log2ck_spark.pipeline import stream_pipeline  # noqa: E402
-from log2ck_spark.queries.ingest import monolog_lines  # noqa: E402
+from bench import drain_ingest  # noqa: E402
 from log2ck_spark.session import get_spark  # noqa: E402
-from log2ck_spark.sink import writer_for  # noqa: E402
 
 DEFAULT_SFS = [
     "/root/testdata/sf0.001",
@@ -44,37 +39,12 @@ DEFAULT_SFS = [
 
 
 def probe(spark, sf_dir: str) -> dict:
-    corpus = ensure_staged(
-        scratch_dir(sf_dir, "monolog_corpus"),
-        lambda p: monolog_lines(spark, sf_dir).write.mode("overwrite").text(p),
-    )
-    out_root = scratch_dir(sf_dir, "sink_layout_probe")
-    shutil.rmtree(out_root, ignore_errors=True)
-    sink = SinkConfig(path=os.path.join(out_root, "sink"))
-    tail = TailSpec(name="layout-probe", path=corpus)
-    config = EngineConfig(
-        tails=[tail],
-        sink=sink,
-        checkpoint_root=os.path.join(out_root, "ckpt"),
-    )
-    rows, _dead = stream_pipeline(spark, config, tail)
-    t0 = time.time()
-    q = (
-        rows.writeStream.foreachBatch(writer_for(sink))
-        .option(
-            "checkpointLocation",
-            os.path.join(config.checkpoint_root, tail.name),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    drain_s = time.time() - t0
-    n_rows = spark.read.parquet(sink.path).count()
-    dates = glob.glob(os.path.join(sink.path, "log_date=*"))
+    sink_path, drain_s = drain_ingest(spark, sf_dir, "sink_layout_probe")
+    n_rows = spark.read.parquet(sink_path).count()
+    dates = glob.glob(os.path.join(sink_path, "log_date=*"))
     files = glob.glob(
-        os.path.join(sink.path, "log_date=*", "*.parquet")
-    ) or glob.glob(os.path.join(sink.path, "**", "*.parquet"), recursive=True)
+        os.path.join(sink_path, "log_date=*", "*.parquet")
+    ) or glob.glob(os.path.join(sink_path, "**", "*.parquet"), recursive=True)
     return {
         "sf_dir": sf_dir,
         "rows": n_rows,

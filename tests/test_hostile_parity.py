@@ -972,3 +972,30 @@ def test_single_gate_fixture_has_exactly_one_row_per_table(single_dir):
             f"SELECT count(*) FROM read_parquet('{single_dir}/{t}.parquet')"
         ).fetchone()
         assert n == 1, (t, n)
+
+
+# --------------------------------------------------------------------------
+# TPC-H q21 over NULL supplier keys. The oracle's EXISTS / NOT EXISTS
+# compare `l2.l_suppkey <> l1.l_suppkey`, which is never true against a
+# NULL, so a NULL-supplier line is neither "another supplier" on the
+# order nor "another supplier that returned". The single-scan rewrite
+# must drop those lines before its (orderkey, suppkey) aggregation, or
+# the NULL group counts toward ns/nrs.
+# --------------------------------------------------------------------------
+
+_NULL_SUPPKEY_REWRITES = {
+    # ~10% NULL l_suppkey, deterministic by (orderkey, linenumber)
+    "lineitem": (
+        "SELECT * REPLACE (CASE WHEN (l_orderkey * 7 + l_linenumber) % 10 = 3"
+        " THEN NULL ELSE l_suppkey END AS l_suppkey) FROM {t}"
+    ),
+}
+
+
+def test_q21_null_suppkey_is_not_another_supplier(spark, sf_dir):
+    from tests.oracle_harness import _build_fixture
+
+    d = _build_fixture("hostile_null_suppkey", _NULL_SUPPKEY_REWRITES, sf_dir)
+    name = "tpch_q21_waiting_supplier"
+    problems = compare(QUERIES[name](spark, d), run_oracle(ORACLES[name], d))
+    assert problems == [], problems

@@ -256,7 +256,6 @@ MULTI_SCAN_OK = {
     "decontaminate_overlap": {"documents.parquet": 2},  # train x eval split join
     "decontaminate_span": {"documents.parquet": 2},
     "ngram_novelty": {"documents.parquet": 2},  # doc-grams vs corpus-grams
-    "text_repetition_stats": {"documents.parquet": 2},
     # -- embedding self/probe joins --
     "dedup_embedding": {"embeddings.parquet": 2},  # anchor set vs corpus
     "dedup_semantic": {"embeddings.parquet": 2},  # seed centroids vs corpus
@@ -291,46 +290,48 @@ MULTI_SCAN_OK = {
     "pmi_collocations": {"documents.parquet": 5},  # unigram+bigram+totals
     "sample_by_mixture": {"documents.parquet": 2},  # weights subtree
     "sample_stratified": {"documents.parquet": 2},  # per-stratum counts
-    "sketch_bloom": {"documents.parquet": 4},  # build vs probe vs audit
+    "sketch_bloom": {"documents.parquet": 3},  # build vs probe vs audit
     "sketch_count_min": {"documents.parquet": 2},  # sketch vs exact audit
     "sketch_hll": {"events.parquet": 2},  # deliberate exact-count audit
     "tfidf_top_terms": {"documents.parquet": 2},  # tf vs df branches
     "vocab_coverage": {"documents.parquet": 2},  # head + total-mass (ReusedExchange at runtime)
     # -- TPC-H decorrelated subqueries / tiny-dim rescans (spec shapes) --
-    "tpch_q2_min_cost_supplier": {"lineitem.parquet": 2, "part.parquet": 2},
     "tpch_q7_volume_shipping": {"nation.parquet": 2},
     "tpch_q8_market_share": {"nation.parquet": 2},
     "tpch_q11_important_share": {"lineitem.parquet": 2, "supplier.parquet": 2},
     "tpch_q15_top_supplier": {"lineitem.parquet": 2},
     "tpch_q17_small_qty_revenue": {"lineitem.parquet": 2, "part.parquet": 2},
-    "tpch_q20_excess_supplier": {"lineitem.parquet": 2, "part.parquet": 2},
-    "tpch_q21_waiting_supplier": {"lineitem.parquet": 3},
     "tpch_q22_global_sales_opportunity": {"customer.parquet": 2},
 }
 
 
 def test_repeated_table_scans_only_where_justified(plans):
     """Count parquet scans per table basename in every plan; any table
-    scanned more than once must appear in MULTI_SCAN_OK at (at most)
-    its documented count. Catches the aggregate-join-back-where-one-
+    scanned more than once must appear in MULTI_SCAN_OK at exactly its
+    documented count. Catches the aggregate-join-back-where-one-
     pass-would-do regression class (approx_distinct pre-r8: the
     per-group count was a second full scan of events joined to the
-    HLL registers)."""
+    HLL registers). A cap above the observed count also fails: a
+    one-pass rewrite must lower its cap, or the headroom would let the
+    removed scans come back unnoticed."""
     import re as _re
     from collections import Counter as _Counter
 
-    bad = []
+    bad = [
+        (name, "-", 0, "not a registered query")
+        for name in MULTI_SCAN_OK.keys() - plans.keys()
+    ]
     for name, p in plans.items():
         locs = _re.findall(r"InMemoryFileIndex(?:\(\d+ paths\))?\[([^\],]+)", p)
         counts = _Counter(loc.rstrip("/").rsplit("/", 1)[-1] for loc in locs)
-        for table, n in counts.items():
-            if n <= 1:
-                continue
-            cap = MULTI_SCAN_OK.get(name, {}).get(table)
+        caps = MULTI_SCAN_OK.get(name, {})
+        for table in counts.keys() | caps.keys():
+            n, cap = counts[table], caps.get(table)
             if cap is None:
-                bad.append((name, table, n, "not in MULTI_SCAN_OK"))
-            elif n > cap:
-                bad.append((name, table, n, f"exceeds documented cap {cap}"))
+                if n > 1:
+                    bad.append((name, table, n, "not in MULTI_SCAN_OK"))
+            elif n != cap:
+                bad.append((name, table, n, f"documented cap is {cap}"))
     assert not bad, (
         f"unjustified repeated scans (one-pass rewrite or allowlist "
         f"review needed): {bad}"
