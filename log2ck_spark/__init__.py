@@ -24,3 +24,7 @@ pruning via date layout.
 """
 
 __version__ = "0.1.0"
+
+from log2ck_spark.zipcache import keep_zip_directories
+
+keep_zip_directories()

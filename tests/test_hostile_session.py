@@ -11,10 +11,13 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parent.parent
 
 PROBE = """
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])  # the checkout holding this test
 from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master("local[8]")
          .appName("hostile-tz")
@@ -46,7 +49,7 @@ print("HOSTILE_RESULT", "PASS" if not fails else repr(fails))
 
 def test_timestamp_queries_survive_non_utc_session():
     r = subprocess.run(
-        [sys.executable, "-c", PROBE],
+        [sys.executable, "-c", PROBE, str(REPO)],
         capture_output=True,
         text=True,
         timeout=300,

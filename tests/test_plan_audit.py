@@ -415,6 +415,7 @@ def test_registry_imports_without_an_active_session():
     the registered callables."""
     import subprocess
     import sys
+    from pathlib import Path
 
     proc = subprocess.run(
         [
@@ -423,7 +424,7 @@ def test_registry_imports_without_an_active_session():
             "import __spark_entry__ as c; qs = c.queries();"
             " os_ = c.oracle_sql(); assert len(qs) >= 169, len(qs)",
         ],
-        cwd="/root/repo",
+        cwd=Path(__file__).resolve().parent.parent,
         capture_output=True,
         text=True,
         timeout=300,
