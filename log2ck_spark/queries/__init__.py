@@ -98,6 +98,8 @@ ROTATION_FIRST: tuple[str, ...] = (
     # r14 (q21's single-scan rewrite, the fused connected-components
     # rounds, the memoized LSH width probe, the pinned jaccard verify
     # filter). q21 also changed its NULL-supplier semantics this round.
+    # 2026-10-18: dedup_clusters changed again (union-find components
+    # replace the min-label propagation loop), so its pin stays.
     # Release these pins once each has a green CORRECTNESS_r15 row.
     "tpch_q21_waiting_supplier",
     "dedup_clusters",

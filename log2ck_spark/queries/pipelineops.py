@@ -11,12 +11,15 @@ training.
 Scale notes per operator are in each docstring; the common theme is
 that none of them is a naive O(n²) join — as-of is one shuffle + one
 window pass, the range join buckets time so each row only meets its
-neighboring buckets, and clustering iterates a small edge list, not
-the corpus.
+neighboring buckets, and clustering runs union-find over a small edge
+list, not the corpus.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -196,102 +199,47 @@ def _jaccard_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_a", "doc_b")
 
 
-def _min_label_cc(
-    spark: SparkSession, edges: DataFrame, n_edges: int
-) -> tuple[DataFrame, bool, int]:
-    """Min-label propagation over a SYMMETRIC edge list → (labels,
-    converged, rounds). labels = (doc_id, label) for every node that
-    occurs in an edge, label = the component's minimum doc_id.
+_LABELS = "doc_id long, label long"
 
-    r14 restructure (guide §2.4 — remove shuffles outright, measured
-    round-by-round at sf0.1):
 
-    * Round 1 is ONE aggregation straight off the edge list: with every
-      label still its own doc_id, "min over neighbor labels" IS "min
-      over neighbor ids", so label₁(a) = least(a, MIN(doc_b)) — the old
-      shape paid an initial-labels distinct (an exchange) plus a
-      join+agg+join round for the identical result. The groupBy key set
-      is exactly the node set, so the init frame disappears entirely.
-    * Rounds 2+ drop the second join: the old shape joined neighbor
-      minima BACK to labels to compute least(label, nmin) and a
-      `changed` flag. Instead the node's own label rides the SAME
-      join+agg as a self-loop (labels doubling as (a, a) edges joined
-      against themselves), so updated(a) = MIN over {label(a)} ∪
-      {label(b): b ∈ N(a)} is one join + one agg.
-    * Convergence via the label-sum invariant, not a changed-count:
-      labels only ever DECREASE, so any change strictly decreases
-      SUM(label). One DECIMAL(38,0) aggregate (exact — no int64
-      overflow at 10^10 ids × 10^10 nodes, no ANSI crash) per round is
-      the whole check, and it is the action that materializes the
-      round's lazy checkpoint — one job per round, same as before,
-      with one join and one exchange less inside it.
+def _union_find(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Union-find over one partition's rows read as undirected (a, b)
+    edges -> one (doc_id, label) row per node seen, label = the least
+    id of its component. A union always hangs the larger root under
+    the smaller, so every root is its set's minimum and find() IS the
+    label. Run over (node, local root) rows the same function merges
+    per-partition results into global components: a local root is a
+    member of its component, so the edges stay connected."""
+    parent: dict[int, int] = {}
 
-    The propagation joins shuffle a graph that is orders smaller than
-    the corpus, but they inherit the session's shuffle-partition count
-    (sized for corpus-scale aggregations). Size the loop's shuffles to
-    the GRAPH instead — n_edges is already on the driver — and restore
-    the session setting afterwards (the returned plan's consumers
-    execute under the caller's config). ~100k edges/partition: 1
-    partition on the fixture, thousands at 100 TB. The per-round sum
-    aggregates are the only actions that run under the override."""
-    sess_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(n_edges // 100_000 + 1)
+    def find(x: int) -> int:
+        root = parent.setdefault(x, x)
+        while parent[root] != root:
+            root = parent[root]
+        while x != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for pdf in batches:
+        for a, b in zip(pdf.iloc[:, 0].tolist(), pdf.iloc[:, 1].tolist()):
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+    nodes = list(parent)
+    yield pd.DataFrame(
+        {"doc_id": nodes, "label": [find(n) for n in nodes]}, dtype="int64"
     )
-    label_sum = F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-    converged = False
-    rounds = 0
-    try:
-        labels = (
-            edges.groupBy(F.col("doc_a").alias("doc_id"))
-            .agg(F.min("doc_b").alias("nmin"))
-            .select(
-                "doc_id",
-                F.least(F.col("doc_id"), F.col("nmin")).alias("label"),
-            )
-            # lazy: the sum right below is the materializing action, so
-            # each round runs ONE job (eager checkpoint + a separate
-            # convergence action was 2 jobs/round).
-            .localCheckpoint(eager=False)
-        )
-        if n_edges == 0:
-            # empty graph: the (empty) round-1 frame is already the
-            # fixpoint — don't spend jobs proving it.
-            return labels, True, 1
-        prev_sum = labels.agg(label_sum).first().s
-        rounds = 1
-        for _ in range(15):  # with round 1: the same 16-round diameter cap
-            prop = edges.unionByName(
-                # self-loop rows: carry each node's OWN label through
-                # the same join+agg, replacing the old join-back
-                labels.select(
-                    F.col("doc_id").alias("doc_a"),
-                    F.col("doc_id").alias("doc_b"),
-                )
-            )
-            # rename the join key instead of referencing labels.doc_id:
-            # labels sits on BOTH sides (inside prop's union and as the
-            # join's right side), and name-based resolution over
-            # disjoint column names sidesteps the self-join attribute
-            # ambiguity that plan-bound references can hit.
-            labels = (
-                prop.join(
-                    labels.withColumnRenamed("doc_id", "nbr"),
-                    F.col("doc_b") == F.col("nbr"),
-                )
-                .groupBy(F.col("doc_a").alias("doc_id"))
-                .agg(F.min("label").alias("label"))
-                .localCheckpoint(eager=False)
-            )
-            new_sum = labels.agg(label_sum).first().s
-            rounds += 1
-            if new_sum == prev_sum:
-                converged = True
-                break
-            prev_sum = new_sum
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", sess_parts)
-    return labels, converged, rounds
+
+
+def _components(edges: DataFrame) -> DataFrame:
+    """Connected components of an undirected edge list in two
+    mapInPandas passes: union-find inside each edge partition, then
+    once more over the (node, local root) rows in one partition. Its
+    input is at most one row per (edge node, edge partition) — the
+    duplicate-pair node set, orders below the corpus — and the pass
+    count is fixed, whatever the component diameter."""
+    local = edges.mapInPandas(_union_find, _LABELS)
+    return local.repartition(1).mapInPandas(_union_find, _LABELS)
 
 
 @register(
@@ -330,75 +278,30 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ends with (pairs alone don't dedup: A~B, B~C must collapse to one
     cluster even if A~C was never emitted).
 
-    Implementation: iterative min-label propagation (the standard
-    large-graph CC algorithm — Kiveris et al.'s hash-to-min family).
-    Labels live on nodes; each round every node takes the min of its
-    own and its neighbors' labels; converges in O(component diameter)
-    rounds — near-dup clusters are tiny and dense, so 2-4 rounds in
-    practice, each round = one join + one aggregate on the EDGE list
-    (thousands of rows), never the corpus. The driver-side loop reads
-    back ONE scalar per round (the changed-label count) — the data
-    never leaves executors; this is the documented exception where
-    iterative algorithms need a convergence check.
+    Implementation: union-find over the (doc_a, doc_b) pair list (see
+    _components) — a local pass per edge partition, then one global
+    pass over the local roots. Both passes run on the EDGE list's node
+    set, never the corpus, in a fixed number of stages: a duplicate
+    chain of any length (a page's successive edits) collapses in the
+    same plan as a pair. Documents outside every pair are their own
+    cluster: the labels (one row per near-dup node) are broadcast into
+    one left join over the corpus scan, no shuffle of the corpus.
+    Building the query runs no Spark job.
 
     The DuckDB oracle computes the same fixpoint declaratively with a
     recursive CTE (reachability + MIN over reachable labels).
     """
-    # materialize the (small) edge list once and truncate its lineage —
-    # every round re-reads it, and without truncation round N's plan
-    # contains N copies of the whole shingle/PPJoin pipeline, which
-    # Catalyst re-optimizes from scratch each iteration (measured 5x
-    # slower). localCheckpoint is the standard iterative-algorithm move
-    # (same role as GraphX's periodic checkpoint). Checkpoint BEFORE
-    # the symmetric-closure union: referencing the un-checkpointed
-    # edges twice duplicated the whole PPJoin subtree inside the
-    # checkpoint job (candidate join + verify ran twice — the r3
-    # bench regression); the swap projection over the checkpointed
-    # half is free.
-    half = _jaccard_edges(spark, sf_dir).localCheckpoint(eager=True)
-    # size-adaptive narrowing: the duplicate-pair graph is tiny
-    # relative to the corpus (hundreds of edges at sf0.1, millions at
-    # 100 TB — either way orders below the doc count), but it inherits
-    # the PPJoin's full partitioning, so every propagation round pays
-    # 32 near-empty tasks per stage. Coalesce (narrow, no shuffle —
-    # the count is free on the checkpointed RDD) to ~100k edges per
-    # partition, floor 1: at cluster scale this keeps thousands of
-    # partitions, on the fixture it collapses scheduling overhead.
-    n_edges = half.count()
-    half = half.coalesce(max(1, min(half.rdd.getNumPartitions(),
-                                    n_edges // 100_000 + 1)))
-    edges = half.unionByName(
-        half.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    )
-
-    # iterate ONLY over nodes that occur in an edge: at 10^10 docs the
-    # duplicate-pair graph touches a small fraction of the corpus, and
-    # propagating labels across isolated singletons would make every
-    # round a full-corpus join for nothing. Singletons rejoin as
-    # self-labeled clusters in one union at the end.
-    docs = tbl(spark, sf_dir, "documents").select("doc_id")
-    labels, converged, _rounds = _min_label_cc(spark, edges, n_edges)
-    if not converged:
-        # Returning labels from a non-converged propagation would emit
-        # SPLIT clusters as if they were final — fail loudly instead.
-        # 16 rounds = component diameter 2^? no: plain min-label moves
-        # one hop/round, so this trips on a >16-hop duplicate chain —
-        # pathological for near-dup graphs, and the right response is a
-        # bigger cap or hash-to-min doubling, not silent truncation.
-        raise RuntimeError(
-            "dedup_clusters: label propagation did not converge within "
-            "16 rounds (duplicate-chain diameter too large)"
+    labels = _components(_jaccard_edges(spark, sf_dir))
+    cluster = F.coalesce("label", "doc_id")
+    return (
+        tbl(spark, sf_dir, "documents")
+        .select("doc_id")
+        .join(F.broadcast(labels), "doc_id", "left")
+        .select(
+            "doc_id",
+            cluster.alias("cluster_id"),
+            (F.col("doc_id") == cluster).cast("int").alias("is_canonical"),
         )
-
-    # labels is orders smaller than the corpus: broadcast the anti-join
-    # build side so the singleton pass is one corpus scan, no shuffle.
-    singletons = docs.join(
-        F.broadcast(labels.select("doc_id")), "doc_id", "left_anti"
-    ).select("doc_id", F.col("doc_id").alias("label"))
-    return labels.unionByName(singletons).select(
-        "doc_id",
-        F.col("label").alias("cluster_id"),
-        (F.col("doc_id") == F.col("label")).cast("int").alias("is_canonical"),
     )
 
 

@@ -55,13 +55,18 @@ def _date_ranged(df: DataFrame, sink: SinkConfig) -> DataFrame:
     return df
 
 
+def _write_parquet(df: DataFrame, sink: SinkConfig, mode: str, path: str) -> None:
+    """Write `df` in the dated layout (see _date_ranged), partitioned
+    by the sink's partition column when `df` carries it."""
+    writer = _date_ranged(df, sink).write.mode(mode)
+    if sink.partition_col in df.columns:
+        writer = writer.partitionBy(sink.partition_col)
+    writer.parquet(path)
+
+
 def write_batch(df: DataFrame, sink: SinkConfig) -> None:
     """Batch write with the MergeTree-like layout (see _date_ranged)."""
-    out = _date_ranged(df, sink)
-    if sink.partition_col in df.columns:
-        out.write.mode("overwrite").partitionBy(sink.partition_col).parquet(sink.path)
-    else:
-        out.write.mode("overwrite").parquet(sink.path)
+    _write_parquet(df, sink, "overwrite", sink.path)
 
 
 def foreach_batch_writer(
@@ -135,21 +140,13 @@ def foreach_batch_writer(
             checked_layout = True
         # Same dated layout as write_batch — without it every
         # micro-batch re-creates the tasks×dates small-files explosion
-        out = _date_ranged(batch_df, sink)
         if idempotent:
             import os
 
             target = os.path.join(sink.path, f"batch_id={batch_id}")
-            if sink.partition_col in batch_df.columns:
-                out.write.mode("overwrite").partitionBy(sink.partition_col).parquet(
-                    target
-                )
-            else:
-                out.write.mode("overwrite").parquet(target)
-        elif sink.partition_col in batch_df.columns:
-            out.write.mode("append").partitionBy(sink.partition_col).parquet(sink.path)
+            _write_parquet(batch_df, sink, "overwrite", target)
         else:
-            out.write.mode("append").parquet(sink.path)
+            _write_parquet(batch_df, sink, "append", sink.path)
 
     return _write
 

@@ -18,6 +18,9 @@ class OpsLogListener(StreamingQueryListener):
     def __init__(self, log_dir: Optional[str] = None, echo: bool = True):
         self.log_dir = log_dir
         self.echo = echo
+        # query id -> log name: QueryTerminatedEvent carries no name, and
+        # a query's terminate line belongs in the same file as its batches
+        self._names: dict[str, str] = {}
 
     def _log(self, name: str, message: str, context: dict) -> None:
         now = datetime.datetime.now()
@@ -31,7 +34,8 @@ class OpsLogListener(StreamingQueryListener):
                 fh.write(line + "\n")
 
     def onQueryStarted(self, event) -> None:
-        self._log(event.name or "query", "query started", {"id": str(event.id)})
+        name = self._names[str(event.id)] = event.name or "query"
+        self._log(name, "query started", {"id": str(event.id)})
 
     def onQueryProgress(self, event) -> None:
         p = event.progress
@@ -54,7 +58,8 @@ class OpsLogListener(StreamingQueryListener):
         )
 
     def onQueryTerminated(self, event) -> None:
-        self._log("query", "query terminated", {"id": str(event.id)})
+        name = self._names.pop(str(event.id), "query")
+        self._log(name, "query terminated", {"id": str(event.id)})
 
     def onQueryIdle(self, event) -> None:  # pragma: no cover
         pass

@@ -999,3 +999,79 @@ def test_q21_null_suppkey_is_not_another_supplier(spark, sf_dir):
     name = "tpch_q21_waiting_supplier"
     problems = compare(QUERIES[name](spark, d), run_oracle(ORACLES[name], d))
     assert problems == [], problems
+
+
+# --------------------------------------------------------------------------
+# A 63-hop duplicate chain — the shape of a page's successive edits. 64
+# docs, each a 100-token window shifted 10 fresh tokens from the one
+# before: neighbours share 86 of 106 distinct 5-shingles (Jaccard 0.81,
+# over the 0.7 threshold), docs two apart 76 of 116 (0.66, under it),
+# so the pair graph is ONE path through all 64 docs. dedup_clusters
+# must label every doc with the minimum id, in a job count that does
+# not grow with the path.
+# --------------------------------------------------------------------------
+
+_EDIT_CHAIN_REWRITES = {
+    "documents": (
+        "SELECT doc_id, text, 'en' AS lang, 'edits' AS source,"
+        " length(text) AS n_chars FROM (SELECT i + 1 AS doc_id,"
+        " array_to_string([concat('w', j)"
+        " for j in range(10 * i, 10 * i + 100)], ' ') AS text"
+        " FROM range(64) r(i))"
+    ),
+}
+
+
+@pytest.fixture(scope="module")
+def edit_chain_dir(sf_dir):
+    from tests.oracle_harness import _build_fixture
+
+    return _build_fixture("hostile_edit_chain", _EDIT_CHAIN_REWRITES, sf_dir)
+
+
+def _count_jobs(spark, run):
+    """(run(), number of Spark jobs it started), counted by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dedup_clusters_collapses_a_63_hop_chain(spark, edit_chain_dir):
+    from log2ck_spark.queries.pipelineops import _jaccard_edges
+
+    d = edit_chain_dir
+    edges = sorted(map(tuple, _jaccard_edges(spark, d).collect()))
+    assert edges == [(i, i + 1) for i in range(1, 64)]
+    oracle = run_oracle(ORACLES["dedup_clusters"], d)
+    assert len(oracle) == 64 and set(oracle.cluster_id) == {1}
+    problems = compare(QUERIES["dedup_clusters"](spark, d), oracle)
+    assert problems == [], problems
+
+
+def test_dedup_clusters_builds_lazily_and_runs_in_fixed_jobs(
+    spark, sf_dir, edit_chain_dir
+):
+    from log2ck_spark.queries.pipelineops import _jaccard_edges
+
+    for d in (sf_dir, edit_chain_dir):
+        # the first read of a table infers its parquet schema with one
+        # job, once per process (io._read_parquet's memo): warm it so
+        # the count below is the query's own
+        QUERIES["dedup_clusters"](spark, d)
+        spark.catalog.clearCache()
+        df, build_jobs = _count_jobs(
+            spark, lambda: QUERIES["dedup_clusters"](spark, d)
+        )
+        assert build_jobs == 0, d
+        _, run_jobs = _count_jobs(spark, df.collect)
+        spark.catalog.clearCache()
+        _, edge_jobs = _count_jobs(spark, _jaccard_edges(spark, d).collect)
+        assert run_jobs <= edge_jobs + 3, (d, run_jobs, edge_jobs)

@@ -50,6 +50,11 @@ BNLJ_OK = {
 SINGLE_PARTITION_OK = {
     "bm25_score",
     "correlate_series",  # single-row moment reduction
+    # global union-find pass over the local roots: at most one row per
+    # (near-duplicate node, edge partition) — the same node set the
+    # query broadcasts to every executor for its label join, so the
+    # single partition adds no new scale bound
+    "dedup_clusters",
     "distinct_exact",
     "doc_perplexity",
     "filter_valid",
@@ -95,8 +100,10 @@ CONSTRUCTION_COLLECT_OK = {
     "dedup_semantic": 64,  # <= _K_MAX=64 md5-seed cell centroids
     "dedup_embedding_lsh": 1,  # first(): O(1) embedding-dim probe
     "similarity_lsh": 1,  # first(): O(1) embedding-dim probe
-    "dedup_embedding": 1,  # first(): O(1) embedding-dim probe
 }
+
+
+_SELF_CHECK = "<deliberate spark.range(3).collect()>"
 
 
 @pytest.fixture(scope="module")
@@ -107,8 +114,6 @@ def built(spark, sf_dir):
     intercepted — collect, take, head, first, toPandas,
     toLocalIterator — so a corpus-proportional toPandas() can't slip
     past a collect-only guard."""
-    from pyspark.sql import DataFrame
-
     pulls: dict[str, list[int]] = {}
     current: dict[str, str | None] = {"name": None}
 
@@ -116,11 +121,15 @@ def built(spark, sf_dir):
         if current["name"] is not None:
             pulls.setdefault(current["name"], []).append(n)
 
-    orig_collect = DataFrame.collect
-    orig_take = DataFrame.take
-    orig_head = DataFrame.head
-    orig_topandas = DataFrame.toPandas
-    orig_iter = DataFrame.toLocalIterator
+    # patch the class the session really returns: on Spark 4 that is
+    # pyspark.sql.classic.dataframe.DataFrame, which overrides every
+    # pull method of the pyspark.sql.DataFrame base
+    frame = type(spark.range(0))
+    orig_collect = frame.collect
+    orig_take = frame.take
+    orig_head = frame.head
+    orig_topandas = frame.toPandas
+    orig_iter = frame.toLocalIterator
 
     def t_collect(self):
         rows = orig_collect(self)
@@ -147,13 +156,16 @@ def built(spark, sf_dir):
         _record(1 << 60)
         return orig_iter(self, prefetchPartitions)
 
-    DataFrame.collect = t_collect
-    DataFrame.take = t_take
-    DataFrame.head = t_head
-    DataFrame.toPandas = t_topandas
-    DataFrame.toLocalIterator = t_iter
+    frame.collect = t_collect
+    frame.take = t_take
+    frame.head = t_head
+    frame.toPandas = t_topandas
+    frame.toLocalIterator = t_iter
     plans = {}
     try:
+        # a known 3-row pull, so the guard can prove the capture works
+        current["name"] = _SELF_CHECK
+        spark.range(3).collect()
         for name, fn in sorted(QUERIES.items()):
             # Cold catalog per build: a persist() registered by an
             # earlier query (or an earlier TEST in the shared session)
@@ -171,11 +183,11 @@ def built(spark, sf_dir):
                 df._jdf.queryExecution().executedPlan().toString()
             )
     finally:
-        DataFrame.collect = orig_collect
-        DataFrame.take = orig_take
-        DataFrame.head = orig_head
-        DataFrame.toPandas = orig_topandas
-        DataFrame.toLocalIterator = orig_iter
+        frame.collect = orig_collect
+        frame.take = orig_take
+        frame.head = orig_head
+        frame.toPandas = orig_topandas
+        frame.toLocalIterator = orig_iter
     return plans, pulls
 
 
@@ -188,7 +200,8 @@ def test_construction_collects_only_bounded_allowlisted(built):
     """No registered query may pull a corpus-proportional frame to the
     driver while BUILDING its plan. Allowlisted names may pull up to
     their documented bound; everyone else must pull nothing."""
-    _, pulls = built
+    pulls = dict(built[1])
+    assert pulls.pop(_SELF_CHECK, None) == [3], "the pull capture is blind"
     bad = []
     for name, sizes in pulls.items():
         cap = CONSTRUCTION_COLLECT_OK.get(name)
@@ -252,6 +265,9 @@ MULTI_SCAN_OK = {
     "dedup_minhash_lsh": {"documents.parquet": 3},
     "dedup_near": {"documents.parquet": 3},  # alias of dedup_minhash_lsh
     "dedup_ngram_jaccard": {"documents.parquet": 4},  # PPJoin prefix self-join + verify
+    # the PPJoin edge pipeline (4, as dedup_ngram_jaccard) + the doc-id
+    # scan the component labels are joined onto
+    "dedup_clusters": {"documents.parquet": 5},
     "dedup_incremental": {"documents.parquet": 2},  # old/new split self-join
     "decontaminate_overlap": {"documents.parquet": 2},  # train x eval split join
     "decontaminate_span": {"documents.parquet": 2},

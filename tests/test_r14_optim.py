@@ -1,63 +1,94 @@
-"""Focused tests for the r14 optimization internals.
+"""Focused tests for optimization internals.
 
-1. pipelineops._min_label_cc (dedup_clusters' connected-components
-   loop, restructured r14): the fused join-free round 1 + self-loop
-   single-join rounds + label-sum convergence must produce the exact
-   min-label fixpoint on star, clique, chain (diameter > 2, exercising
-   the multi-round path), and empty graphs — and must do it in the
-   round counts the restructure claims (the r13 shape ran an
-   init-labels distinct plus TWO join rounds on a star graph; the
-   fused shape runs ONE join round).
+1. pipelineops._components (dedup_clusters' connected components):
+   union-find per edge partition, then once over the local roots,
+   must label every node with its component's minimum id on star,
+   triangle, chain, long-path, empty and random graphs — whatever the
+   component diameter and however the edges are spread over
+   partitions. The random graphs are checked against a pure-Python
+   BFS reference.
+2. similarity._corpus_dim's metadata memo.
 """
 
 from __future__ import annotations
 
 import os
+import random
 
-from pyspark.sql import functions as F
-
-from log2ck_spark.queries.pipelineops import _min_label_cc
-
-
-def _run_cc(spark, pairs):
-    half = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-    edges = half.unionByName(
-        half.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    )
-    labels, converged, rounds = _min_label_cc(spark, edges, len(pairs))
-    return {r.doc_id: r.label for r in labels.collect()}, converged, rounds
+from log2ck_spark.queries.pipelineops import _LABELS, _components, _union_find
 
 
-def test_min_label_cc_star_graphs_converge_in_two_rounds(spark):
-    # two pairs + a triangle: every component is min-centered, so the
-    # fused round 1 already produces the fixpoint and round 2 is the
-    # convergence proof. The r13 shape needed an init distinct + 2 join
-    # rounds for the same graphs; "rounds" here counts the fused
-    # aggregation round too, so 2 == one join round executed.
-    labels, converged, rounds = _run_cc(
-        spark, [(1, 2), (5, 9), (10, 11), (10, 12), (11, 12)]
-    )
-    assert converged
+def _edges(spark, pairs, partitions=1):
+    rdd = spark.sparkContext.parallelize(pairs, partitions)
+    return spark.createDataFrame(rdd, "doc_a long, doc_b long")
+
+
+def _run_cc(spark, pairs, partitions=1):
+    labels = _components(_edges(spark, pairs, partitions)).collect()
+    return {r.doc_id: r.label for r in labels}
+
+
+def _bfs_labels(pairs):
+    adj: dict[int, set[int]] = {}
+    for a, b in pairs:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    labels: dict[int, int] = {}
+    for start in adj:
+        if start in labels:
+            continue
+        seen, todo = {start}, [start]
+        while todo:
+            for nb in adj[todo.pop()]:
+                if nb not in seen:
+                    seen.add(nb)
+                    todo.append(nb)
+        labels.update(dict.fromkeys(seen, min(seen)))
+    return labels
+
+
+def test_components_star_and_triangle_graphs(spark):
+    labels = _run_cc(spark, [(1, 2), (5, 9), (10, 11), (10, 12), (11, 12)])
     assert labels == {1: 1, 2: 1, 5: 5, 9: 5, 10: 10, 11: 10, 12: 10}
-    assert rounds == 2
 
 
-def test_min_label_cc_chain_diameter_four(spark):
-    # 1-2-3-4-5 chain: min-label moves one hop per round, so the label
-    # frontier takes 4 propagation rounds + 1 proof round — the
-    # multi-round join path, including the self-loop rows that carry
-    # each node's own label through the single join.
-    labels, converged, rounds = _run_cc(spark, [(1, 2), (2, 3), (3, 4), (4, 5)])
-    assert converged
+def test_components_chain_diameter_four(spark):
+    labels = _run_cc(spark, [(1, 2), (2, 3), (3, 4), (4, 5)])
     assert labels == {i: 1 for i in range(1, 6)}
-    assert rounds == 5
 
 
-def test_min_label_cc_empty_graph_short_circuits(spark):
-    labels, converged, rounds = _run_cc(spark, [])
-    assert converged
-    assert labels == {}
-    assert rounds == 1
+def test_components_empty_graph(spark):
+    assert _run_cc(spark, []) == {}
+    assert _run_cc(spark, [], partitions=3) == {}
+
+
+def test_components_64_hop_path(spark):
+    # the longest path through 65 nodes, listed from the far end so no
+    # partition sees the minimum first
+    path = [(i, i + 1) for i in reversed(range(64))]
+    for partitions in (1, 4):
+        labels = _run_cc(spark, path, partitions)
+        assert labels == {i: 0 for i in range(65)}, partitions
+
+
+def test_components_merge_local_roots_across_partitions(spark):
+    # 3-4 sits in one partition and 1-4 in the other: each local pass
+    # roots its half apart, and only the global pass joins them
+    edges = _edges(spark, [(3, 4), (1, 4)], partitions=2)
+    assert edges.rdd.getNumPartitions() == 2
+    local = sorted(edges.mapInPandas(_union_find, _LABELS).collect())
+    assert local == [(1, 1), (3, 3), (4, 1), (4, 3)]
+    assert {r.doc_id: r.label for r in _components(edges).collect()} == {
+        1: 1, 3: 1, 4: 1,
+    }
+
+
+def test_components_match_bfs_on_random_graphs(spark):
+    rng = random.Random(20261018)
+    for n_nodes, n_edges, partitions in ((40, 30, 2), (300, 280, 5)):
+        ids = rng.sample(range(1 << 40), n_nodes)
+        pairs = [tuple(rng.sample(ids, 2)) for _ in range(n_edges)]
+        assert _run_cc(spark, pairs, partitions) == _bfs_labels(pairs)
 
 
 def test_corpus_dim_memo_hits_and_invalidates(spark, tmp_path):

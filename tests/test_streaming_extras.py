@@ -97,6 +97,12 @@ def test_dead_letter_stream_and_listener(spark, tmp_path):
         main_q, dead_q = run_ingest_stream(
             spark, config, config.tails[0], with_dead_letter=True
         )
+        # a named query logs to its own "<name>-<date>.log"
+        named_q = (
+            spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+            .writeStream.format("noop").queryName("dl_named")
+            .trigger(processingTime="1 second").start()
+        )
 
         def dead_count():
             try:
@@ -123,6 +129,7 @@ def test_dead_letter_stream_and_listener(spark, tmp_path):
             ).collect()
         }
         assert dead_rows == {"GARBAGE LINE", "another bad one"}
+        assert _wait(lambda: len(named_q.recentProgress) > 0)
 
         # graceful stop of everything (A12)
         stop_all(spark)
@@ -136,6 +143,28 @@ def test_dead_letter_stream_and_listener(spark, tmp_path):
         some_file = next(iter(os.listdir(logdir)))
         content = (logdir / some_file).read_text()
         assert "\t" in content
+
+        def lines(name):
+            return "".join(f.read_text() for f in logdir.glob(f"{name}-*.log"))
+
+        def line(event, q):
+            return f'{event}\t{{"id": "{q.id}"}}'
+
+        # every line of a query lands in its query's file, the terminate
+        # line included (QueryTerminatedEvent carries no name)
+        assert _wait(
+            lambda: line("query terminated", named_q) in lines("dl_named"), 10
+        )
+        assert line("query started", named_q) in lines("dl_named")
+        assert "batch committed" in lines("dl_named")
+        assert _wait(
+            lambda: all(
+                line("query terminated", q) in lines("query")
+                for q in (main_q, dead_q)
+            ),
+            10,
+        )
+        assert str(named_q.id) not in lines("query")
     finally:
         spark.streams.removeListener(listener)
 
